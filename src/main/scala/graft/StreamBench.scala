@@ -9,7 +9,7 @@ import graft.streaming.{FullCurate, FullDoc}
   * doc_id-ordered micro-batches via a MemoryStream and reports
   * sustained docs/sec — the capacity-planning number the batch bench
   * cannot give (state-store round trips, per-batch planning, and the
-  * two stateful exchanges are the streaming-only costs).
+  * fused gate exchange are the streaming-only costs).
   *
   * Protocol: the feature extraction (tokenize/fingerprint/minhash) is
   * done BEFORE the clock starts (it is q248's batch-side cost, already
@@ -26,7 +26,7 @@ import graft.streaming.{FullCurate, FullDoc}
   *     from `recentProgress` over the measured window (`addBatch` =
   *     plan+execute incl. foreachBatch body, `walCommit`+`commitOffsets`
   *     = offset-log fsyncs, `stateCommit` = state-store checkpointing
-  *     summed over both stateful operators, `queryPlanning` =
+  *     of the one fused stateful operator, `queryPlanning` =
   *     incremental planning) — where the constant goes, not a guess;
   *   - SPARK_GRAFT_SB_SHUFFLE: shuffle partitions (default = cores).
   *     This is ALSO the state-store instance count PER stateful

@@ -42,7 +42,7 @@ object BloomGate {
 
   val mBits = 1024L
   val kHashes = 3
-  private val words = (mBits / 32).toInt
+  private[streaming] val words = (mBits / 32).toInt
 
   /** The gated corpus: documents plus id-shifted copies (the
     * [[graft.operators.DedupOps.dupCorpus]] convention) so every source's
@@ -136,11 +136,16 @@ object BloomGate {
       .orderBy($"m")
   }
 
-  /** Scala twin of `TextFunctions.md5Hash32` for the stateful fold. */
-  private def h32(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 8), 16)
+  private val md5 = ThreadLocal.withInitial(() =>
+    java.security.MessageDigest.getInstance("MD5"))
+
+  /** Scala twin of `TextFunctions.md5Hash32` for the stateful fold: the
+    * first 4 md5 bytes as an unsigned big-endian int, which is what
+    * parsing the first 8 hex chars base-16 yields. */
+  private[streaming] def h32(s: String): Long = {
+    val d = md5.get.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) |
+      ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
 
   private def positions(fp: String, m: Long, k: Int): Seq[Int] =

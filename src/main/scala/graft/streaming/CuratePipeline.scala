@@ -126,7 +126,9 @@ object CuratePipeline {
   }
 
   /** K2/K3 sink: checkpointed parquet append — restart resumes from the
-    * committed micro-batch, so each batch lands exactly once. */
+    * committed micro-batch. Delivery is AT-LEAST-ONCE on replay: the
+    * append ignores the batch id, so a crash after the write and before
+    * the commit log lands that batch's rows a second time on restart. */
   def parquetAppendSink(ds: Dataset[CuratedDoc], outPath: String,
                         checkpointPath: String): StreamingQuery =
     ds.writeStream

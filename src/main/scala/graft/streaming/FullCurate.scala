@@ -13,12 +13,29 @@ import graft.functions.TextFunctions.{fingerprint, tokens, wordShingles}
 case class FullDoc(source: String, doc_id: Long, fp: String,
                    n_tokens: Long, q_u4: Long, sig: Seq[Long])
 
-/** One gate's vote on one document. `gate` ∈ {exact, band}; the exact
-  * row (always exactly one per doc) carries the doc's feature columns
-  * for the batch-local combine; band rows carry only the vote. */
+/** One gate's vote on one document. `gate` ∈ {exact, band, media, sem};
+  * the exact row (always exactly one per doc) carries the doc's feature
+  * columns for the batch-local combine; the other rows carry only the
+  * vote. */
 case class GateVote(doc_id: Long, source: String, fp: String,
                     n_tokens: Long, q_u4: Long, gate: String,
                     blocked: Boolean)
+
+/** One row of the FUSED gate exchange: each document expands to its rows
+  * across every gate it participates in, tagged with the namespaced
+  * group key ("x:"/"b:"/"m:"/"s:"). Fields a row's gate does not read
+  * stay empty — the exchange pays only per-row nulls for them. */
+case class FusedRow(key: String, doc_id: Long,
+                    source: String, fp: String, n_tokens: Long, q_u4: Long,
+                    band: Int, sig: Seq[Long], kind: String, phash: Long,
+                    embedding: Seq[Float])
+
+/** The one state value for every fused gate group. A group's key lives
+  * in exactly one gate namespace, so exactly one field is ever
+  * populated; the others serialize as empties. */
+case class FusedGateState(bloom: Vector[Int], sigs: Seq[SigDoc],
+                          media: Seq[MediaDoc],
+                          sem: Seq[(Long, Seq[Float])])
 
 /** THE FULL STREAMING CURATION GATE (q248) — round 9 shipped the three
   * stages separately (q166: Bloom exact gate + per-source quality
@@ -33,13 +50,15 @@ case class GateVote(doc_id: Long, source: String, fp: String,
   *                     stateless against the broadcast history table)
   *     → checkpointed parquet append.
   *
-  * The two stateful stages key DIFFERENTLY (source vs band slice), so
-  * they run as parallel append-mode `flatMapGroupsWithState` branches
-  * over the same stream, unioned; the cross-gate combine is BATCH-LOCAL
-  * (every vote for a doc lands in the doc's own micro-batch) and runs
-  * inside `foreachBatch` — the only multi-stateful shape Structured
-  * Streaming supports for arbitrary custom state, and the right one: no
-  * stage ever waits on another's watermark.
+  * The two stateful stages key DIFFERENTLY (source vs band slice); they
+  * share ONE `flatMapGroupsWithState` over a namespaced key ("x:"
+  * source / "b:" band:slice — [[fusedGates]], the same operator
+  * [[MultiModalCurate]] feeds its media and semantic rows into); the
+  * cross-gate combine is BATCH-LOCAL (every vote for a doc lands in the
+  * doc's own micro-batch) and runs inside `foreachBatch` as one
+  * `groupBy(doc_id)` aggregate ([[combineBatch]]), so each micro-batch
+  * reads its gate output once and runs and commits the state stores
+  * once. No stage ever waits on another's watermark.
   *
   * Both folds stay SEEN-based (every arrival registers in Bloom bits
   * and band history whether or not it is admitted), which is what keeps
@@ -67,12 +86,17 @@ case class GateVote(doc_id: Long, source: String, fp: String,
   * exercises suppression-by-near-dup-only, admission, and both quality
   * verdicts.
   *
-  * Scale shape: each micro-batch shuffles once per stateful branch
-  * (source key; band keys at `bands` rows/doc); state is O(sources ×
-  * m/32) Bloom words + O(real collision groups × cap × perms) band
-  * longs; the floor table is O(sources) broadcast; the combine touches
-  * only the batch's own rows. The replay's shuffles are the q94 and
-  * q173 audited shapes plus one doc_id join. */
+  * Scale shape: each micro-batch shuffles once into the fused operator
+  * (1 + `bands` rows/doc) and once on doc_id for the combine; state is
+  * O(sources × m/32) Bloom words + O(real collision groups × cap ×
+  * perms) band longs, one state-store commit cycle per micro-batch; the
+  * floor table is O(sources) broadcast. The replay's shuffles are the
+  * q94 and q173 audited shapes plus one doc_id join.
+  *
+  * A checkpoint written before the gates were fused (two stateful
+  * operators, state keyed by source and by (band, slice)) cannot be
+  * resumed by the fused query: its state schema and operator ids
+  * differ. Replay such a stream from the start into a new checkpoint. */
 object FullCurate {
 
   /** Edit-re-crawl fixture constants (the q92 convention, offset clear
@@ -129,61 +153,105 @@ object FullCurate {
       .as[FullDoc]
   }
 
-  private val bloomWords = (BloomGate.mBits / 32).toInt
+  /** A document's rows on the fused gate exchange: the exact row keyed
+    * by source, and for a doc with a signature one row per band keyed by
+    * its slice. */
+  private[streaming] def textRows(source: String, docId: Long, fp: String,
+                                  nTokens: Long, qU4: Long,
+                                  sig: Seq[Long]): Seq[FusedRow] =
+    FusedRow("x:" + source, docId, source, fp, nTokens, qU4,
+      0, Seq.empty, "", 0L, Seq.empty) +:
+      (if (sig.isEmpty) Seq.empty
+       else (0 until bands).map { b =>
+         val slice = sig.slice(b * rows, b * rows + rows)
+         FusedRow(s"b:$b:${slice.mkString(",")}", docId,
+           "", "", 0L, 0L, b, sig, "", 0L, Seq.empty)
+       })
 
-  /** The one streaming transform: two stateful gate branches over the
-    * same input, unioned into per-doc votes. Run [[combineBatch]] on
-    * each micro-batch of the result (all of a doc's votes are
-    * batch-local). */
+  /** The one streaming transform: both gates in the fused operator, one
+    * vote per doc per gate row. Run [[combineBatch]] on each
+    * micro-batch of the result (all of a doc's votes are batch-local). */
   def gateStream(docs: Dataset[FullDoc]): Dataset[GateVote] = {
     import docs.sparkSession.implicits._
-    val exact = docs.groupByKey(_.source)
-      .flatMapGroupsWithState[Vector[Int], GateVote](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: String, it: Iterator[FullDoc], state: GroupState[Vector[Int]]) =>
-          val seq = it.toSeq
-          val byId = seq.map(d => d.doc_id -> d).toMap
-          val (verdicts, w) = BloomGate.runFold(
-            seq.map(d => StreamDoc(d.source, d.doc_id, d.fp)),
-            state.getOption.getOrElse(Vector.fill(bloomWords)(0)))
-          state.update(w)
-          verdicts.iterator.map { v =>
-            val d = byId(v.doc_id)
-            GateVote(d.doc_id, d.source, d.fp, d.n_tokens, d.q_u4,
-              "exact", !v.emitted)
-          }
-      }
-    val band = docs.filter(_.sig.nonEmpty)
-      .flatMap(d => (0 until bands).map(b =>
-        BandRow(b, d.sig.slice(b * rows, b * rows + rows), d.doc_id, d.sig)))
-      .groupByKey(r => (r.band, r.bk))
-      .flatMapGroupsWithState[GateGroupState, GateVote](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: (Int, Seq[Long]), it: Iterator[BandRow],
-         state: GroupState[GateGroupState]) =>
-          val (out, entries) = NearDupGate.runFold(
-            it.map(r => SigDoc(r.doc_id, r.sig)).toSeq,
-            state.getOption.map(_.entries).getOrElse(Seq.empty), key._1)
-          state.update(GateGroupState(entries))
-          out.iterator.map(v =>
-            GateVote(v.doc_id, "", "", 0L, 0L, "band", v.colliders.nonEmpty))
-      }
-    exact.unionByName(band)
+    fusedGates(docs.flatMap(d =>
+      textRows(d.source, d.doc_id, d.fp, d.n_tokens, d.q_u4, d.sig)))
   }
 
-  /** Batch-local cross-gate combine + stateless quality cut: admitted
-    * iff NO gate voted blocked, then token bounds and the per-source
-    * floor (broadcast O(sources) table; an unknown source admits at
-    * floor 0 — the q166 rule). */
+  /** THE fused stateful gate operator of both curation streams: every
+    * gate's group lives in ONE `flatMapGroupsWithState` over the
+    * namespaced key ("x:" source / "b:" band:slice / "m:" media band /
+    * "s:" sem band), so a micro-batch pays ONE shuffle and ONE
+    * state-store commit cycle however many gates it runs (the per-batch
+    * fixed cost is `state_commit × stateful-operators × store-instances`).
+    * The key spaces are disjoint by prefix and each group's fold is the
+    * gate's own `runFold`, so the verdicts are the unfused gates'. */
+  private[streaming] def fusedGates(fused: Dataset[FusedRow]): Dataset[GateVote] = {
+    import fused.sparkSession.implicits._
+    fused.groupByKey(_.key)
+      .flatMapGroupsWithState[FusedGateState, GateVote](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (key: String, it: Iterator[FusedRow],
+         state: GroupState[FusedGateState]) =>
+          val rows0 = it.toSeq
+          val st = state.getOption.getOrElse(
+            FusedGateState(Vector.empty, Seq.empty, Seq.empty, Seq.empty))
+          key.charAt(0) match {
+            case 'x' =>
+              val byId = rows0.map(r => r.doc_id -> r).toMap
+              val (verdicts, w) = BloomGate.runFold(
+                rows0.map(r => StreamDoc(r.source, r.doc_id, r.fp)),
+                if (st.bloom.nonEmpty) st.bloom
+                else Vector.fill(BloomGate.words)(0))
+              state.update(st.copy(bloom = w))
+              verdicts.iterator.map { v =>
+                val r = byId(v.doc_id)
+                GateVote(r.doc_id, r.source, r.fp, r.n_tokens, r.q_u4,
+                  "exact", !v.emitted)
+              }
+            case 'b' =>
+              val (out, entries) = NearDupGate.runFold(
+                rows0.map(r => SigDoc(r.doc_id, r.sig)),
+                st.sigs, rows0.head.band)
+              state.update(st.copy(sigs = entries))
+              out.iterator.map(v =>
+                GateVote(v.doc_id, "", "", 0L, 0L, "band",
+                  v.colliders.nonEmpty))
+            case 'm' =>
+              val (out, entries) = MediaGate.runFold(
+                rows0.map(r => MediaDoc(r.doc_id, r.kind, r.phash)),
+                st.media, key.substring(2))
+              state.update(st.copy(media = entries))
+              out.iterator.map(v =>
+                GateVote(v.media_id, "", "", 0L, 0L, "media",
+                  v.colliders.nonEmpty))
+            case _ =>
+              val (out, entries) = SemanticGate.runFold(
+                rows0.map(r => (r.doc_id, r.embedding)),
+                st.sem, key.substring(2))
+              state.update(st.copy(sem = entries))
+              out.iterator.map(v =>
+                GateVote(v.vec_id, "", "", 0L, 0L, "sem",
+                  v.colliders.nonEmpty))
+          }
+      }
+  }
+
+  /** Batch-local cross-gate combine + stateless quality cut, reading the
+    * votes ONCE (a `foreachBatch` batch is uncached: a second read
+    * re-runs the stateful operator and its commits): one
+    * `groupBy(doc_id)` takes "any gate blocked" and the features of the
+    * doc's one exact vote, then token bounds and the per-source floor
+    * (broadcast O(sources) table; an unknown source admits at floor 0 —
+    * the q166 rule). */
   def combineBatch(votes: DataFrame, floors: DataFrame): DataFrame = {
     val spark = votes.sparkSession
     import spark.implicits._
-    val blocked = votes.groupBy($"doc_id")
-      .agg(max(when($"blocked", 1).otherwise(0)).as("any_blocked"))
-    votes.filter($"gate" === "exact")
-      .select($"doc_id", $"source", $"fp", $"n_tokens", $"q_u4")
-      .join(blocked, "doc_id")
-      .filter($"any_blocked" === 0)
+    votes.groupBy($"doc_id")
+      .agg(max($"blocked").as("blocked"),
+        max(when($"gate" === "exact",
+          struct($"source", $"fp", $"n_tokens", $"q_u4"))).as("d"))
+      .filter(!$"blocked" && $"d".isNotNull)
+      .select($"doc_id", $"d.*")
       .join(broadcast(floors), Seq("source"), "left")
       .filter($"n_tokens" >= minTokens && $"n_tokens" < maxTokens &&
         $"q_u4" >= coalesce($"thr_u4", lit(0L)))
@@ -201,7 +269,13 @@ object FullCurate {
   def curatedStream(docs: Dataset[FullDoc], floors: DataFrame,
                     outPath: String, checkpointPath: String,
                     sinkPartitions: Option[Int] = None): StreamingQuery =
-    gateStream(docs).writeStream
+    sinkVotes(gateStream(docs), floors, outPath, checkpointPath, sinkPartitions)
+
+  /** Votes → [[combineBatch]] → parquet append, for both curation streams. */
+  private[streaming] def sinkVotes(votes: Dataset[GateVote], floors: DataFrame,
+                                   outPath: String, checkpointPath: String,
+                                   sinkPartitions: Option[Int]): StreamingQuery =
+    votes.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: Dataset[GateVote], _: Long) =>

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables
 import graft.functions.VectorFunctions.signLshBucket
 import graft.operators.Multimodal
@@ -16,22 +16,6 @@ case class MmDoc(source: String, doc_id: Long, fp: String,
                  n_tokens: Long, q_u4: Long, sig: Seq[Long],
                  kind: String, phash: Long, vhash: Long,
                  embedding: Seq[Float], sim32: Long, has_vec: Boolean)
-
-/** One row of the FUSED gate exchange: each item expands to its rows
-  * across every gate it participates in, tagged with the namespaced
-  * group key ("x:"/"b:"/"m:"/"s:"). Fields a row's gate does not read
-  * stay empty — the exchange pays only per-row nulls for them. */
-case class FusedRow(key: String, gate: String, doc_id: Long,
-                    source: String, fp: String, n_tokens: Long, q_u4: Long,
-                    band: Int, sig: Seq[Long], kind: String, phash: Long,
-                    embedding: Seq[Float])
-
-/** The one state value for every fused gate group. A group's key lives
-  * in exactly one gate namespace, so exactly one field is ever
-  * populated; the other three serialize as empties. */
-case class FusedGateState(bloom: Vector[Int], sigs: Seq[SigDoc],
-                          media: Seq[MediaDoc],
-                          sem: Seq[(Long, Seq[Float])])
 
 /** THE FULL MULTI-MODAL ADMISSION CHAIN (q317) — the r15 verdict's last
   * composition gap: the text pipeline (q248 = exact Bloom + MinHash
@@ -54,15 +38,17 @@ case class FusedGateState(bloom: Vector[Int], sigs: Seq[SigDoc],
   *     → checkpointed parquet append.
   *
   * The five stateful stages key differently (source / text band / sem
-  * band / media band / video band), so they run as parallel append-mode
-  * `flatMapGroupsWithState` branches over the same stream, unioned into
-  * per-item votes; the cross-gate combine is batch-local and runs in
-  * `foreachBatch` ([[FullCurate]]'s shape, two more branches). Every
-  * fold is SEEN-based, so the composed verdict is a pure conjunction
-  * over arrival order and the chain replays relationally with no
-  * recursion — the declared q317 IS that replay ([[decisionLog]]), and
-  * stream ≡ replay row-for-row in doc_id-ordered micro-batches,
-  * including across a RocksDB checkpoint restart (spec-asserted).
+  * band / media band / video band); they share [[FullCurate]]'s ONE
+  * fused `flatMapGroupsWithState` over a namespaced key
+  * ([[FullCurate.fusedGates]], with media and semantic rows beside the
+  * text rows), and the per-item votes meet in the same one-pass
+  * batch-local combine inside `foreachBatch`
+  * ([[FullCurate.combineBatch]]). Every fold is SEEN-based, so the
+  * composed verdict is a pure conjunction over arrival order and the
+  * chain replays relationally with no recursion — the declared q317 IS
+  * that replay ([[decisionLog]]), and stream ≡ replay row-for-row in
+  * doc_id-ordered micro-batches, including across a RocksDB checkpoint
+  * restart (spec-asserted).
   *
   * WHY the composition has real multi-modal work (not five gates
   * glued): media/embeddings derive from the BASE id, so an edited
@@ -73,8 +59,9 @@ case class FusedGateState(bloom: Vector[Int], sigs: Seq[SigDoc],
   * catch is the whole point of multi-modal admission, and the fixture
   * exercises it at every SF (spec-pinned).
   *
-  * Scale shape: one shuffle per branch per micro-batch (≤ 4+7+4+4 band
-  * rows/item + the source key); state is the five gates' documented
+  * Scale shape: one shuffle into the fused operator per micro-batch
+  * (≤ 1+4+7+4+4 rows/item: the source key and the band rows) and one
+  * doc_id shuffle for the combine; state is the five gates' documented
   * O(groups × cap) footprints, unchanged by composition. The replay
   * adds three rank-window-over-band-blocks chains and two base-id joins
   * to q248's — every window block-sized, never the corpus. */
@@ -134,116 +121,38 @@ object MultiModalCurate {
       .as[MmDoc]
   }
 
-  private val bloomWords = (BloomGate.mBits / 32).toInt
-  import NearDupGate.{bands, rows}
-
-  /** The one streaming transform, FUSED (r16 verdict #3): every gate's
-    * group lives in ONE `flatMapGroupsWithState` over a namespaced key
-    * ("x:" source / "b:" band:slice / "m:" media band / "s:" sem band),
-    * so a micro-batch pays ONE shuffle and ONE state-store commit cycle
-    * instead of four — the r16 StreamBench decomposition measured the
-    * per-batch fixed cost as `state_commit × stateful-operators ×
-    * store-instances` (268 s summed per 13.1 s batch at 4 ops × 32
-    * stores), which is pure operator-count overhead, not data.
-    *
-    * Fusion preserves the verdict stream EXACTLY: the gate key spaces
-    * are disjoint by prefix, each group still contains the same rows,
-    * and each group's fold is the same gate-shared `runFold` the
-    * split-operator form called (spec: stream ≡ replay, incl. across a
-    * RocksDB checkpoint restart). Per-gate state rides one sum-type
-    * value whose unused fields stay empty. */
+  /** The one streaming transform: each item's text rows
+    * ([[FullCurate.textRows]]), media/video band rows and, with an
+    * embedding, semantic band rows all go through the fused gate
+    * operator ([[FullCurate.fusedGates]]). */
   def gateStream(docs: Dataset[MmDoc]): Dataset[GateVote] = {
     import docs.sparkSession.implicits._
-    docs
-      .flatMap { d =>
-        val exact = Seq(FusedRow("x:" + d.source, "exact", d.doc_id,
-          d.source, d.fp, d.n_tokens, d.q_u4, 0, Seq.empty, "", 0L, Seq.empty))
-        val band =
-          if (d.sig.isEmpty) Seq.empty
-          else (0 until bands).map { b =>
-            val slice = d.sig.slice(b * rows, b * rows + rows)
-            FusedRow(s"b:$b:${slice.mkString(",")}", "band", d.doc_id,
-              "", "", 0L, 0L, b, d.sig, "", 0L, Seq.empty)
-          }
-        val media =
-          (MediaGate.bandKeysOf(d.kind, d.phash).map(bk =>
-            FusedRow("m:" + bk, "media", d.doc_id,
-              "", "", 0L, 0L, 0, Seq.empty, d.kind, d.phash, Seq.empty)) ++
-           MediaGate.bandKeysOf("video", d.vhash).map(bk =>
-            FusedRow("m:" + bk, "media", d.doc_id,
-              "", "", 0L, 0L, 0, Seq.empty, "video", d.vhash, Seq.empty)))
-        val sem =
-          if (!d.has_vec) Seq.empty
-          else SemanticGate.bandKeysOf(d.sim32).map(bk =>
-            FusedRow("s:" + bk, "sem", d.doc_id,
-              "", "", 0L, 0L, 0, Seq.empty, "", 0L, d.embedding))
-        exact ++ band ++ media ++ sem
-      }
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[FusedGateState, GateVote](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[FusedRow],
-         state: GroupState[FusedGateState]) =>
-          val rows0 = it.toSeq
-          val st = state.getOption.getOrElse(
-            FusedGateState(Vector.empty, Seq.empty, Seq.empty, Seq.empty))
-          key.charAt(0) match {
-            case 'x' =>
-              val byId = rows0.map(r => r.doc_id -> r).toMap
-              val (verdicts, w) = BloomGate.runFold(
-                rows0.map(r => StreamDoc(r.source, r.doc_id, r.fp)),
-                if (st.bloom.nonEmpty) st.bloom
-                else Vector.fill(bloomWords)(0))
-              state.update(st.copy(bloom = w))
-              verdicts.iterator.map { v =>
-                val r = byId(v.doc_id)
-                GateVote(r.doc_id, r.source, r.fp, r.n_tokens, r.q_u4,
-                  "exact", !v.emitted)
-              }
-            case 'b' =>
-              val (out, entries) = NearDupGate.runFold(
-                rows0.map(r => SigDoc(r.doc_id, r.sig)),
-                st.sigs, rows0.head.band)
-              state.update(st.copy(sigs = entries))
-              out.iterator.map(v =>
-                GateVote(v.doc_id, "", "", 0L, 0L, "band",
-                  v.colliders.nonEmpty))
-            case 'm' =>
-              val (out, entries) = MediaGate.runFold(
-                rows0.map(r => MediaDoc(r.doc_id, r.kind, r.phash)),
-                st.media, key.substring(2))
-              state.update(st.copy(media = entries))
-              out.iterator.map(v =>
-                GateVote(v.media_id, "", "", 0L, 0L, "media",
-                  v.colliders.nonEmpty))
-            case _ =>
-              val (out, entries) = SemanticGate.runFold(
-                rows0.map(r => (r.doc_id, r.embedding)),
-                st.sem, key.substring(2))
-              state.update(st.copy(sem = entries))
-              out.iterator.map(v =>
-                GateVote(v.vec_id, "", "", 0L, 0L, "sem",
-                  v.colliders.nonEmpty))
-          }
-      }
+    FullCurate.fusedGates(docs.flatMap { d =>
+      val media =
+        (MediaGate.bandKeysOf(d.kind, d.phash).map(bk =>
+          FusedRow("m:" + bk, d.doc_id,
+            "", "", 0L, 0L, 0, Seq.empty, d.kind, d.phash, Seq.empty)) ++
+         MediaGate.bandKeysOf("video", d.vhash).map(bk =>
+          FusedRow("m:" + bk, d.doc_id,
+            "", "", 0L, 0L, 0, Seq.empty, "video", d.vhash, Seq.empty)))
+      val sem =
+        if (!d.has_vec) Seq.empty
+        else SemanticGate.bandKeysOf(d.sim32).map(bk =>
+          FusedRow("s:" + bk, d.doc_id,
+            "", "", 0L, 0L, 0, Seq.empty, "", 0L, d.embedding))
+      FullCurate.textRows(d.source, d.doc_id, d.fp, d.n_tokens, d.q_u4,
+        d.sig) ++ media ++ sem
+    })
   }
 
   /** The end-to-end streaming pipeline: five gates → batch-local combine
     * (admitted iff NO gate voted blocked, then token bounds + per-source
-    * floor — [[FullCurate.combineBatch]] verbatim) → checkpointed
-    * parquet append. */
+    * floor) → checkpointed parquet append — [[FullCurate.sinkVotes]]. */
   def curatedStream(docs: Dataset[MmDoc], floors: DataFrame,
                     outPath: String, checkpointPath: String,
                     sinkPartitions: Option[Int] = None): StreamingQuery =
-    gateStream(docs).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[GateVote], _: Long) =>
-        val out = FullCurate.combineBatch(batch.toDF(), floors)
-        sinkPartitions.fold(out)(out.coalesce)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+    FullCurate.sinkVotes(gateStream(docs), floors, outPath, checkpointPath,
+      sinkPartitions)
 
   /** Declared q317 — the multi-modal decision log: every arrival with
     * EVERY stage's independent verdict (text exact / text near-dup /

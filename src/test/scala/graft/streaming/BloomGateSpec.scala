@@ -27,6 +27,21 @@ class BloomGateSpec extends SparkSpec {
       s"$dropped/${firsts.length} uniques false-dropped")
   }
 
+  test("h32 equals TextFunctions.md5Hash32 on random strings") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val rnd = new scala.util.Random(32)
+    val alphabet = Vector("a", "Z", "7", " ", "#", "é", "ß", "中", "\uD83D\uDE42")
+    val strs = Seq("", "fp#0") ++ Seq.fill(300)(
+      Seq.fill(rnd.nextInt(48))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    val want = strs.toDF("s")
+      .select(graft.functions.TextFunctions.md5Hash32($"s")).as[Long].collect()
+    assert(strs.map(BloomGate.h32) === want.toSeq)
+    // the top bit of the first byte is set on some strings: the value is
+    // unsigned, never a negative int widened
+    assert(want.exists(_ >= (1L << 31)))
+  }
+
   test("runFold: split calls advance state exactly as one combined call") {
     val docs = Seq(
       StreamDoc("s", 1L, "aa"), StreamDoc("s", 2L, "bb"),

@@ -137,6 +137,65 @@ class FullCurateSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  test("one stateful pass per micro-batch: one operator, one state-store stage, the source read once") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    val docs = FullCurate.fullDocs(spark, sf).collect().sortBy(_.doc_id).take(40)
+    graft.CacheGuard.release()
+    val outDir = java.nio.file.Files.createTempDirectory("graft-fc1-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-fc1-ckpt").toString
+    val mem = MemoryStream[FullDoc]
+    val q = FullCurate.curatedStream(mem.toDS(), floorsDf, outDir, ckpt)
+    try {
+      val stateStages = StateStages.during(spark) {
+        mem.addData(docs.toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+      // an idle trigger before the add reports a progress with no rows
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.length === 1)
+      assert(batches.head.stateOperators.length === 1)
+      assert(stateStages === 1)
+      assert(batches.head.numInputRows === docs.length.toLong)
+    } finally q.stop()
+  }
+
+  test("combineBatch on hand-built votes: admitted iff no gate blocked, in token bounds and at the floor") {
+    val sparkS = spark
+    import sparkS.implicits._
+    import CuratePipeline.{minTokens, maxTokens}
+    def exact(id: Long, src: String = "a", n: Long = minTokens, q: Long = 50L,
+              blocked: Boolean = false) =
+      GateVote(id, src, s"fp$id", n, q, "exact", blocked)
+    def band(id: Long, blocked: Boolean) =
+      GateVote(id, "", "", 0L, 0L, "band", blocked)
+    val votes = Seq(
+      exact(1),                                    // exact vote only: admitted
+      exact(2, blocked = true),                    // exact vote blocked
+      exact(3), band(3, false), band(3, true),     // one band vote blocked
+      exact(4), band(4, false), band(4, false),    // every band vote clear
+      exact(5, n = minTokens - 1),                 // under the token minimum
+      exact(6, n = maxTokens),                     // the maximum is exclusive
+      exact(7, n = maxTokens - 1),
+      exact(8, q = 39L),                           // below the source floor
+      exact(9, q = 40L),                           // at the floor
+      exact(10, src = "unlisted", q = 0L))         // unknown source: floor 0
+    val floors = Seq(("a", 40L)).toDF("source", "thr_u4")
+    val out = FullCurate.combineBatch(votes.toDF(), floors)
+    assert(out.columns.toSeq === Seq("doc_id", "source", "fp", "n_tokens", "q_u4"))
+    val got = out.collect().map(r => r.getAs[Long]("doc_id") ->
+      (r.getAs[String]("source"), r.getAs[String]("fp"),
+        r.getAs[Long]("n_tokens"), r.getAs[Long]("q_u4"))).toMap
+    // admitted rows carry the exact vote's features, never a band vote's
+    assert(got === Map(
+      1L -> ("a", "fp1", minTokens, 50L),
+      4L -> ("a", "fp4", minTokens, 50L),
+      7L -> ("a", "fp7", maxTokens - 1, 50L),
+      9L -> ("a", "fp9", minTokens, 40L),
+      10L -> ("unlisted", "fp10", minTokens, 0L)))
+  }
+
   test("restart from the checkpoint on RocksDB: both gates' state survives, stream still ≡ replay") {
     val sparkS = spark
     import sparkS.implicits._

@@ -133,6 +133,30 @@ class MultiModalCurateSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  test("one stateful pass per micro-batch: one operator, one state-store stage, the source read once") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    val docs = MultiModalCurate.mmDocs(spark, sf).collect().sortBy(_.doc_id).take(40)
+    graft.CacheGuard.release()
+    val outDir = java.nio.file.Files.createTempDirectory("graft-mm1-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-mm1-ckpt").toString
+    val mem = MemoryStream[MmDoc]
+    val q = MultiModalCurate.curatedStream(mem.toDS(), floorsDf, outDir, ckpt)
+    try {
+      val stateStages = StateStages.during(spark) {
+        mem.addData(docs.toIndexedSeq: _*)
+        q.processAllAvailable()
+      }
+      // an idle trigger before the add reports a progress with no rows
+      val batches = q.recentProgress.filter(_.numInputRows > 0)
+      assert(batches.length === 1)
+      assert(batches.head.stateOperators.length === 1)
+      assert(stateStages === 1)
+      assert(batches.head.numInputRows === docs.length.toLong)
+    } finally q.stop()
+  }
+
   test("restart from the checkpoint on RocksDB: all five gates' state survives, stream still ≡ replay") {
     val sparkS = spark
     import sparkS.implicits._
