@@ -12,8 +12,8 @@ import org.apache.spark.storage.StorageLevel
   *
   *   - operators route every barrier through [[barrier]];
   *   - operators with an EAGER materialization step (e.g.
-  *     `DedupOps.nearDupKeepers`, whose connected-components pass
-  *     localCheckpoints the pair graph on entry) release their own
+  *     `DedupOps.nearDupKeepers`, whose connected-components rounds
+  *     run before it returns) release their own
   *     barriers inline the moment the barrier's consumer has run;
   *   - for lazily-returned queries the CONSUMER calls [[release]] after
   *     its action — `Verify` does per query, `Bench` per rep; a library

@@ -1,7 +1,10 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables
 
 /** Connected components over a near-dup pair graph — the step that turns
@@ -12,13 +15,14 @@ import graft.Tables
   *
   * Implementation is iterative min-label propagation on the symmetrized
   * edge list: `label(n) ← min(label(n), min over neighbors label(m))`,
-  * repeated until a fixpoint (checked with one tiny aggregate per round,
-  * not a collect). Each round is one shuffle keyed by node id — the
-  * standard open-source MapReduce CC shape. Rounds needed = graph
-  * diameter; for the log-round variant at extreme diameters use
-  * large-star/small-star contraction, and at cluster scale truncate
-  * lineage (checkpoint) every few rounds — here the per-round cache()
-  * serves that role.
+  * repeated until a fixpoint (a count of dropped labels taken by the
+  * round's own job, not a collect). Each round is one shuffle keyed by
+  * node id — the standard open-source MapReduce CC shape — run as one
+  * Spark job over co-partitioned RDDs. Rounds needed ≈ graph diameter;
+  * for the log-round variant at extreme diameters use large-star/
+  * small-star contraction ([[starContractCc]]). The other iterative
+  * operators here run DataFrame rounds, each cut with an eager
+  * `localCheckpoint` so the plan does not nest every earlier round.
   */
 object Components {
 
@@ -93,72 +97,91 @@ object Components {
   }
 
   /** Min-label propagation. `edges` has columns (a, b); result is
-    * (node, component) where component = min node id reachable.
+    * (node, component) where component = min node id reachable. Edges
+    * with a null endpoint are dropped.
     *
-    * Two iterative-algorithm essentials, both learned the hard way:
-    *   - every round ends in an EAGER `localCheckpoint()` — without the
-    *     lineage cut, round k's logical plan nests all k-1 predecessors
-    *     and Catalyst re-analyzes the whole tower each round (optimizer
-    *     time, not data, dominated an uncut run ~10× over);
-    *   - the convergence signal rides the SAME job as the label update
-    *     (`observe` metric: # of nodes whose label strictly dropped), so
-    *     a round is exactly one shuffle + one action, with no second
-    *     compare-join pass.
-    * Each round releases the PREVIOUS round's checkpoint blocks once the
-    * new round has materialized (only the returned labels and the
-    * symmetrized edges stay pinned for the caller's consumption).
-    * localCheckpoint is the right lineage cut in local mode; on a real
-    * cluster, where executor loss would drop the blocks and fail the job,
-    * swap it for reliable `checkpoint()` against the cluster FS. */
+    * The rounds run on RDDs, not DataFrames: a DataFrame round pays a
+    * Catalyst plan, AQE's per-stage jobs and a `localCheckpoint` to cut
+    * the plan tower, a fixed cost that outweighs the data on any graph
+    * whose rounds are small. Here:
+    *   - the symmetrized adjacency is built ONCE, hash-partitioned by
+    *     source over `spark.sql.shuffle.partitions` and persisted
+    *     MEMORY_AND_DISK;
+    *   - labels keep that partitioner, so the neighbor join is a narrow
+    *     co-partitioned `cogroup` (which spills) and a round's only
+    *     shuffle is the `reduceByKey` that takes each node's min over its
+    *     own label and its neighbors' (map-side combined);
+    *   - the count of nodes whose label dropped is the action that
+    *     materializes the round, so a round is exactly one Spark job with
+    *     no planning, and the fixpoint test rides it.
+    * Initial labels are min(node, its neighbors): the first hop costs no
+    * round of its own. Each round releases the PREVIOUS round's blocks
+    * once the new round has materialized; the returned labels stay
+    * persisted until `CacheGuard.release`. Unlike a localCheckpoint, an
+    * evicted or lost label block recomputes from the round's shuffle
+    * output, so this is safe on a cluster as it stands; the price is that
+    * the rounds' shuffle files live until the returned relation is
+    * garbage-collected. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    // symmetrize once (see [[symGraph]]: one edge leaf, src-partitioned
-    // eager cache); propagation then only needs one join direction
-    val g = symGraph(edges)
-    val sym = g.sym
-    var labels = sym.select($"src".as("node")).distinct()
-      .select($"node", $"node".as("component"))
-      .localCheckpoint()
+    val parts = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val adj = edges
+      .select($"a".cast("long"), $"b".cast("long"))
+      .filter($"a".isNotNull && $"b".isNotNull)
+      .rdd
+      .flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Iterator((a, b), (b, a))
+      }
+      .partitionBy(parts)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var labels: RDD[(Long, Long)] = adj
+      .reduceByKey(parts, math.min(_, _)) // narrow: adj already has `parts`
+      .mapPartitions(_.map { case (n, m) => (n, math.min(n, m)) },
+        preservesPartitioning = true)
+    var round: RDD[(Long, (Long, Long))] = null // the persisted last round
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIter) {
-      val viaNeighbors = sym
-        .join(labels, $"src" === $"node")
-        .select($"dst".as("node"), $"component",
-          lit(null).cast("long").as("own"))
-      val merged = labels
-        .select($"node", $"component", $"component".as("own"))
-        .unionByName(viaNeighbors)
-        .groupBy($"node")
-        .agg(min($"component").as("component"), max($"own").as("own"))
-      val obs = org.apache.spark.sql.Observation(s"cc_round_$iter")
-      val next = merged
-        .observe(obs, sum(when($"component" < $"own", 1L).otherwise(0L)).as("changed"))
-        .select($"node", $"component")
-        .localCheckpoint() // eager: this IS the round's one action
-      unpersistCheckpoint(labels) // prev round's blocks, now unreferenced
-      labels = next
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      iter += 1
+    try {
+      while (!converged && iter < maxIter) {
+        // each node sends its label to itself, as (label, label), and to
+        // its neighbors, as (label, Long.MinValue): per node, min(label)
+        // is then its new label and max(previous) its old one
+        val next = adj.cogroup(labels)
+          .flatMap { case (n, (nbrs, cs)) =>
+            cs.iterator.flatMap(c => Iterator((n, (c, c))) ++
+              nbrs.iterator.map(d => (d, (c, Long.MinValue))))
+          }
+          .reduceByKey(parts, (x, y) => (math.min(x._1, y._1), math.max(x._2, y._2)))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val prev = round
+        round = next
+        // the round's one job: fills `next` and counts dropped labels;
+        // the previous round's blocks are unreferenced once it has run
+        val changed =
+          try next.filter { case (_, (c, old)) => c < old }.count()
+          finally if (prev != null) prev.unpersist(blocking = false)
+        labels = next.mapValues(_._1)
+        converged = changed == 0L
+        iter += 1
+      }
+    } finally {
+      adj.unpersist(blocking = false)
+      // exhausting the budget without a fixpoint means labels are WRONG
+      // for nodes farther than maxIter hops from their component's min,
+      // and a failed round leaves nothing to return: free the labels here
+      if (!converged && round != null) round.unpersist(blocking = false)
     }
-    g.free()
-    // exhausting the budget without a fixpoint means labels are WRONG for
-    // nodes farther than maxIter hops from their component's min — fail
-    // loudly rather than return silently split clusters; the failure path
-    // must free the final round's checkpoint blocks itself (the onRelease
-    // hook below is only registered on success)
-    if (!converged) { unpersistCheckpoint(labels); throw new IllegalStateException(
+    if (!converged) throw new IllegalStateException(
       s"connectedComponents did not converge in $maxIter rounds — component " +
         "diameter exceeds the budget; raise maxIter or switch to " +
-        "large-star/small-star contraction for log-round convergence") }
-    // the returned labels ride the final round's checkpoint blocks — they
-    // must stay pinned until the caller's action, then CacheGuard.release
-    // frees them (unpersisting earlier would destroy the data: a
-    // localCheckpoint cannot recompute)
-    val out = labels
-    graft.CacheGuard.onRelease(() => unpersistCheckpoint(out))
-    out
+        "large-star/small-star contraction for log-round convergence")
+    // the returned labels read the final round's persisted blocks until the
+    // caller's action has run; CacheGuard.release frees them
+    val last = round
+    graft.CacheGuard.onRelease(() => last.unpersist(blocking = false))
+    labels.toDF("node", "component")
   }
 
   /** Declared query: collapse a synthetic near-dup CHAIN graph over
@@ -208,7 +231,7 @@ object Components {
     *
     * Each half-round is one keyed aggregation (neighborhood min, with
     * map-side partials) plus one join back, ending in an eager
-    * `localCheckpoint` (the round-cut discipline above); convergence
+    * `localCheckpoint` (the DataFrame round cut); convergence
     * is an EXACT set comparison — same count AND empty anti-join —
     * never a checksum. Returns the (node, component) labels for every
     * non-isolated node plus the rounds taken. */
@@ -217,7 +240,7 @@ object Components {
     val spark = edges.sparkSession
     import spark.implicits._
     // the round's edge count rides the checkpoint job as an `observe`
-    // metric (the q48 convergence discipline): the old form re-counted
+    // metric, so it costs no job of its own: the old form re-counted
     // BOTH relations with separate `count()` jobs every round — up to 3
     // extra sequential driver actions per round on a latency-bound
     // iteration (r17; same finding as hits()'s scalar normalizers)
@@ -427,12 +450,12 @@ object Components {
     * deg ≥ 1 everywhere (no dangling-mass term) and every node receives
     * ≥ 1 contribution, so the inner join is total.
     *
-    * Scale shape: same as [[connectedComponents]] — one shuffle per
-    * round keyed on node id, degrees computed once and re-joined, eager
-    * `localCheckpoint` per round cutting the plan tower, previous round's
-    * blocks released as the next materializes. Fixed `iters` (no
-    * convergence test) keeps it exactly replayable; rank mass drift per
-    * round is bounded by the floor losses (< deg total). */
+    * Scale shape: one shuffle per round keyed on node id, degrees
+    * computed once and re-joined, eager `localCheckpoint` per round
+    * cutting the plan tower, previous round's blocks released as the
+    * next materializes. Fixed `iters` (no convergence test) keeps it
+    * exactly replayable; rank mass drift per round is bounded by the
+    * floor losses (< deg total). */
   def pageRank(edges: DataFrame, iters: Int = 5): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
@@ -812,10 +835,11 @@ object Components {
     * (DuckDB's `least` NULL semantics differ from Spark's — never rely
     * on them).
     *
-    * Scale shape: [[connectedComponents]]'s — one node-keyed shuffle per
-    * round (neighbor min + self min), lineage-cut rounds with block
-    * release; `rounds` bounds the radius explored, the right knob when
-    * anything past k hops is policy-equivalent to unreachable. */
+    * Scale shape: one node-keyed shuffle per round (neighbor min + self
+    * min), as in [[connectedComponents]] but in DataFrame rounds,
+    * lineage-cut with block release; `rounds` bounds the radius
+    * explored, the right knob when anything past k hops is
+    * policy-equivalent to unreachable. */
   def bfsHops(edges: DataFrame, seedMod: Int = 20,
               rounds: Int = 5): DataFrame = {
     val spark = edges.sparkSession
@@ -1116,7 +1140,7 @@ object Components {
     * relation on its current ancestor key (roots self-loop with hop 0,
     * so converged rows ride through unchanged; the join is total — every
     * ancestor id IS a node — hence inner, never dropping rows). Rounds
-    * are lineage-cut with block release per the q48 discipline.
+    * are lineage-cut with block release (the [[pageRank]] discipline).
     *
     * `nodes` has columns (node: long, parent: long nullable); parent
     * null marks a root. The FIXED round count is part of the declared
@@ -1242,10 +1266,10 @@ object Components {
       .select(least($"la", $"lb").as("a"), greatest($"la", $"lb").as("b"))
       .distinct()
     val merged = connectedComponents(contracted)
-    // connectedComponents materializes its edges eagerly on entry, so
-    // `contracted` has fully run by now; the final compose reads only the
-    // labeled and merged leaves, so the pairs blocks are releasable here
-    // (the checkpointLeaf hook's later call is a safe no-op)
+    // connectedComponents runs its rounds eagerly, so `contracted` has
+    // fully run by now; the final compose reads only the labeled and
+    // merged leaves, so the pairs blocks are releasable here (the
+    // checkpointLeaf hook's later call is a safe no-op)
     graft.CacheGuard.dropCheckpoint(pairs)
     labeled
       .join(merged.select($"node".as("old_label"), $"component"),

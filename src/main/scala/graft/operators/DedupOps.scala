@@ -409,35 +409,32 @@ object DedupOps {
     * shuffle per graph round over the PAIR graph only (O(duplicates), not
     * O(corpus) — the corpus itself never enters the iteration); the final
     * keeper join is one broadcast-or-shuffle hash join of corpus ids
-    * against CC labels. The signature cache is released as soon as CC's
-    * eager edge materialization has consumed it. */
+    * against CC labels, and cluster sizes are one keeper-partitioned
+    * window count over it. The signature cache is released as soon as
+    * CC's eager rounds have consumed it. */
   def nearDupKeepers(spark: SparkSession, dir: String,
                      shingleN: Int = 3, perms: Int = 16,
                      bands: Int = 4, threshold: Double = 0.5): DataFrame = {
     import spark.implicits._
     val (pairs, sigCached) =
       md5MinHashPairs(spark, dir, shingleN, perms, bands, threshold)
-    // connectedComponents symmetrizes + localCheckpoints its edges EAGERLY
-    // on entry, so by the time it returns the pair pipeline has fully run,
-    // nothing downstream references the signatures, and their storage can
-    // be freed early in EITHER regime (each call no-ops for the other;
-    // the release hook's later call is a no-op too)
+    // connectedComponents runs its rounds EAGERLY, so by the time it
+    // returns the pair pipeline has fully run, nothing downstream
+    // references the signatures, and their storage can be freed early in
+    // EITHER regime (each call no-ops for the other; the release hook's
+    // later call is a no-op too)
     val comps = Components.connectedComponents(pairs.select($"a", $"b"))
     graft.CacheGuard.drop(sigCached)
     graft.CacheGuard.dropCheckpoint(sigCached)
     val ids = dupCorpus(spark, dir).select($"doc_id")
-    // checkpoint leaf, not a lazy plan: (doc, keeper) feeds BOTH the
-    // cluster-size rollup and the final join — and every consumer of this
-    // operator re-references the returned relation — so as a lazy plan
-    // the label join re-plans and re-runs per reference (round 18)
-    val labeled = graft.CacheGuard.checkpointLeaf(
-      ids.join(comps, ids("doc_id") === comps("node"), "left")
-        .select($"doc_id", coalesce($"component", $"doc_id").as("keeper")))
-    labeled.join(
-        labeled.groupBy($"keeper").agg(count(lit(1)).as("cluster_size")),
-        "keeper")
+    // cluster sizes from one keeper-partitioned window over the label
+    // join: (doc, keeper) is referenced once, so it needs no leaf and no
+    // rollup joined back
+    ids.join(comps, ids("doc_id") === comps("node"), "left")
+      .select($"doc_id", coalesce($"component", $"doc_id").as("keeper"))
       .select($"doc_id", $"keeper", ($"doc_id" === $"keeper").as("is_keeper"),
-        $"cluster_size")
+        count(lit(1)).over(org.apache.spark.sql.expressions.Window
+          .partitionBy($"keeper")).as("cluster_size"))
       .orderBy($"doc_id")
   }
 
@@ -558,8 +555,11 @@ object DedupOps {
     * cluster-size join already in the pipeline. */
   def qualityKeepers(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val labeled = nearDupKeepers(spark, dir)
-      .select($"doc_id", $"keeper".as("cluster_id"), $"cluster_size")
+    // leaf: `lb` feeds both the best-copy rollup and the join back, and
+    // the two copies of the keeper subtree do not share their id shuffle
+    // (the inner join pushes an isnotnull filter into only one of them)
+    val labeled = graft.CacheGuard.checkpointLeaf(nearDupKeepers(spark, dir)
+      .select($"doc_id", $"keeper".as("cluster_id"), $"cluster_size"))
     val docs = Tables.documents(spark, dir).select($"doc_id", $"n_chars")
     val cn = docs.unionByName(docs.withColumn("doc_id", $"doc_id" + dupOffset))
     val lb = labeled.join(cn, "doc_id")

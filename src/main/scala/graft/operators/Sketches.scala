@@ -342,8 +342,8 @@ object Sketches {
           .partitionBy($"pid").orderBy($"v")))
       val offs = byRange.groupBy($"pid").agg(count(lit(1)).as("c"))
         .withColumn("off", coalesce(sum($"c").over(
-          org.apache.spark.sql.expressions.Window.orderBy($"pid")
-            .rowsBetween(Long.MinValue, -1)), lit(0L)))  // global-window-ok: O(partitions)
+          org.apache.spark.sql.expressions.Window.orderBy($"pid")  // global-window-ok: O(partitions)
+            .rowsBetween(Long.MinValue, -1)), lit(0L)))
         .select($"pid", $"off")
       val ranked = local.join(broadcast(offs), "pid")
         .select($"v", ($"lrn" + $"off").as("rn"))

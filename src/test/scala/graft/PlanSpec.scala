@@ -319,13 +319,32 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q297 unigram-LM train: the piece map broadcasts — no corpus-sized join, no window, no cartesian") {
-    val p = plan(TextAnalysis.unigramLmTrain(spark, sf))
+    // the EM rounds run inside eager checkpoint leaves, so the returned
+    // plan only scans their output: the Viterbi joins are in the plans
+    // executed during the call
+    val executed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        executed.add(qe.executedPlan.treeString)
+      override def onFailure(f: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    val p = try {
+      val s = plan(TextAnalysis.unigramLmTrain(spark, sf))
+      org.apache.spark.GraftBusBridge.flushListenerBus(spark.sparkContext)
+      s
+    } finally spark.listenerManager.unregister(l)
     graft.CacheGuard.release()
     assert(!p.contains("CartesianProduct"), p.take(3000))
     assert(!p.contains("Window"), p.take(3000))
     // every Viterbi pass rides a broadcast of the 1-row cost map
-    assert(p.contains("BroadcastNestedLoopJoin") ||
-      p.contains("BroadcastExchange"), p.take(3000))
+    val all = (p +: executed.toArray(Array.empty[String]).toSeq).mkString("\n")
+    assert(all.contains("BroadcastNestedLoopJoin") ||
+      all.contains("BroadcastExchange"), all.take(3000))
   }
 
   test("q298 unigram encode: trained dictionary broadcasts onto the token stream; no window, no cartesian") {

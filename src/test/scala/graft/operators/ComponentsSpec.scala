@@ -70,6 +70,40 @@ class ComponentsSpec extends SparkSpec {
     assert(leaked.size <= 1, s"leaked ${leaked.size} persisted RDDs across rounds")
   }
 
+  test("connectedComponents: at most one Spark job per round plus one, and no SQL execution per round") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.GraftBusBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    // a 12-node chain 0-1-…-11: diameter 11, so min-label propagation
+    // from self-labels needs at most 11 rounds that drop a label plus
+    // one that finds the fixpoint
+    val chain = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
+    val rounds = 12
+    val (jobs, sqlRuns) = (new AtomicInteger, new AtomicInteger)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqlRuns.incrementAndGet()
+        case _ => ()
+      }
+    }
+    GraftBusBridge.flushListenerBus(sc)
+    sc.addSparkListener(l)
+    val comps = try {
+      val c = Components.connectedComponents(chain, maxIter = 30)
+      GraftBusBridge.flushListenerBus(sc)
+      c
+    } finally sc.removeSparkListener(l)
+    val got = comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    graft.CacheGuard.release()
+    assert(got === (0L to 11L).map(_ -> 0L).toMap)
+    assert(jobs.get <= rounds + 1, s"${jobs.get} jobs for $rounds rounds")
+    // at most the edge input's own execution, whatever the round count
+    assert(sqlRuns.get <= 1, s"${sqlRuns.get} SQL executions")
+  }
+
   test("dedupClusters: every doc labeled; chain groups of 5 collapse to min-id keeper") {
     val out = Components.dedupClusters(spark, sf).collect()
     val n = graft.Tables.documents(spark, sf).count()

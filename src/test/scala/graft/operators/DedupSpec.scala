@@ -208,7 +208,7 @@ class DedupSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"still pinned: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
     // an EAGER composed query (nearDupKeepers) releases its own barrier
-    // inline; localCheckpointed CC state is also dropped by completion
+    // inline; the persisted CC labels are freed by the release below
     DedupOps.nearDupKeepers(spark, sf).count()
     graft.CacheGuard.release()
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
@@ -241,6 +241,17 @@ class DedupSpec extends SparkSpec {
     val sizes = out.filter(_.getAs[Boolean]("is_keeper"))
       .map(_.getAs[Long]("cluster_size")).sum
     assert(sizes === 2 * nDocs)
+  }
+
+  test("nearDupKeepers: each row's cluster_size is the number of rows sharing its keeper") {
+    val out = DedupOps.nearDupKeepers(spark, sf).collect()
+    graft.CacheGuard.release()
+    val members = out.groupBy(_.getAs[Long]("keeper")).view.mapValues(_.length.toLong)
+    assert(members.values.exists(_ > 1L)) // the corpus has real clusters
+    out.foreach { r =>
+      assert(r.getAs[Long]("cluster_size") === members(r.getAs[Long]("keeper")),
+        s"doc ${r.getAs[Long]("doc_id")}")
+    }
   }
 
   test("leakageSafeSplit: split constant within clusters; naive straddles are flagged; 8/1/1 shape") {

@@ -114,7 +114,7 @@ class FullCurateSpec extends SparkSpec {
     }
   }
 
-  test("stream ≡ replay: both stateful branches + batch-local combine match the declared q248 over micro-batches") {
+  test("stream ≡ replay: the fused stateful gates + batch-local combine match the declared q248 over micro-batches") {
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx = sparkS.sqlContext

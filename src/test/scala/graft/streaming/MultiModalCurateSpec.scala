@@ -110,7 +110,7 @@ class MultiModalCurateSpec extends SparkSpec {
     assert(baseWithVec.forall(_.getAs[Boolean]("sem_ok")))
   }
 
-  test("stream ≡ replay: five stateful branches + batch-local combine match the declared q317 over micro-batches") {
+  test("stream ≡ replay: the fused stateful gates + batch-local combine match the declared q317 over micro-batches") {
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx = sparkS.sqlContext
