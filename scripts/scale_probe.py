@@ -92,14 +92,15 @@ def addb(rnd, q, sf1, sf10, verdict):
 
 def addd(rnd, q, x1, x10, verdict):
     """Third probe series (round-14, verdict ask #7): the scaled-
-    DICTIONARY probe (graft.DictProbe — corpus FIXED, vocabulary /
+    DICTIONARY probe (graft.Probe q298_dict_1x q298_dict_10x q299_grams_1x
+    q299_grams_10x — corpus FIXED, vocabulary /
     benchmark-gram set grown ~10x), stored under key "dict" as
     {x1_s, x10_s, ratio, ...} so the dictionary term's bend is
     recorded next to the corpus-growth series.
 
-    Rejects non-positive inputs (r14 ADVICE: DictProbe used to emit a
-    -1.0 failure sentinel; a failed measurement must never become a
-    recorded ratio — DictProbe now prints null and exits nonzero, and
+    Rejects non-positive inputs (r14 ADVICE: the dictionary probe used to
+    emit a -1.0 failure sentinel; a failed measurement must never become a
+    recorded ratio — graft.Probe prints null and exits nonzero, and
     this guard catches any stale sentinel fed by hand)."""
     if x1 <= 0 or x10 <= 0:
         sys.exit(f"addd: non-positive measurement ({x1}, {x10}) — "

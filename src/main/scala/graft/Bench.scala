@@ -208,7 +208,7 @@ object Bench {
       val runs = (1 to math.max(1, reps)).map { _ =>
         // drop data caches between reps: CacheManager matches rebuilt
         // identical plans, so without this a repeat of a cache-using query
-        // (q19/q20/q24) measures warm-cache reads — not comparable to the
+        // (q20/q24/q55) measures warm-cache reads — not comparable to the
         // single-shot baseline. Reps isolate JIT/scheduler noise only.
         //
         // The drain is BLOCKING (round-15 finding): with the default
@@ -487,24 +487,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // contract is local[32]-class parallelism; default to the machine's
-    // cores when the env override is absent
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the iterative operators (q48/q98/q116) release localCheckpoint
-    // blocks on purpose; the per-release WARN would land in the stdout
-    // tail the driver parses for the one JSON line
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = localSession()
     // Warm up the JVM/codegen/shuffle machinery once so the first measured
     // query reflects the operator, not session spin-up. A warm-up failure
     // is loudly reported — it would taint every number that follows.
@@ -512,7 +495,7 @@ object Bench {
       case e: Throwable =>
         System.err.println(s"[bench] WARM-UP FAILED: ${e.getClass.getName}: ${e.getMessage}")
     }
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
+    val reps = envReps
     // local-iteration filter (same contract as Verify): SPARK_GRAFT_ONLY=q20,q55
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
@@ -542,4 +525,32 @@ object Bench {
     System.out.flush()
     spark.stop()
   }
+
+  /** The bench's session, shared with [[Probe]]: `local[SPARK_GRAFT_CPUS]`
+    * (default: the machine's cores — the contract is local[32]-class
+    * parallelism), shuffle partitions = cores, the graft extensions, a
+    * UTC session. */
+  private[graft] def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // the iterative operators (q48/q98/q116) release localCheckpoint
+    // blocks on purpose; the per-release WARN would land in the stdout
+    // tail a harness parses for the one JSON line
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD",
+      org.apache.logging.log4j.Level.ERROR)
+    spark
+  }
+
+  /** Reps per query: SPARK_GRAFT_BENCH_REPS, default 2, at least 1. */
+  private[graft] def envReps: Int =
+    math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt)
 }

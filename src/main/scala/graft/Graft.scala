@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Library facade: the one import a user of the engine needs.
   *
-  * The engine's 295 declared queries (`SparkEntry.queries`) are the
+  * The engine's 316 declared queries (`SparkEntry.queries`) are the
   * EVIDENCE surface — each is a composed, DuckDB-oracled example of the
   * operators below. A consuming team programs against the operator
   * objects, which this facade groups by family with stable names; every
@@ -56,8 +56,8 @@ object Graft {
     * Spec: `RelationalSpec`. */
   val relational: operators.Relational.type = operators.Relational
 
-  /** Dedup: exact fingerprint (q18), MinHash+LSH banding (q55 oracled
-    * family; xxhash64 fast variant spec-pinned), n-gram Jaccard (q20),
+  /** Dedup: exact fingerprint (q18), MinHash+LSH banding (q55, md5
+    * family, recall spec-pinned), n-gram Jaccard (q20),
     * SimHash (q21/q159), keeper election via connected components
     * (q67), leakage-safe splits (q81), incremental/Bloom/TTL gates
     * (q88/q74/q127), dedup-then-audit compositions (q175/q178 — the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 
-import graft.functions.{Md5MinHashSignature, MinHashSignature, NfcNormalizeExpr, SignLshBucketExpr, SimHashExpr, StripAccentsExpr, VecDotExpr, WordShinglesExpr}
+import graft.functions.{Md5MinHashSignature, NfcNormalizeExpr, SignLshBucketExpr, SimHashExpr, StripAccentsExpr, VecDotExpr, WordShinglesExpr}
 
 /** Engine extension point: registers graft's native Catalyst expressions so
   * SQL users get them too. Activate with
@@ -14,15 +14,6 @@ import graft.functions.{Md5MinHashSignature, MinHashSignature, NfcNormalizeExpr,
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      (args: Seq[Expression]) => args match {
-        case Seq(arr) => MinHashSignature(arr, 32)
-        case Seq(arr, Literal(p: Int, _)) => MinHashSignature(arr, p)
-        case _ => throw new IllegalArgumentException(
-          "usage: minhash_sig(array<string>[, perms: int literal])")
-      }))
     ext.injectFunction((
       new FunctionIdentifier("md5_minhash_sig"),
       new ExpressionInfo(classOf[Md5MinHashSignature].getName, "md5_minhash_sig"),

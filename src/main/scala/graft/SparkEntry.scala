@@ -73,13 +73,10 @@ object SparkEntry {
     "q17_hourly_counts" -> ((s, d) => Relational.hourlyEventCounts(s, d)),
     // — dedup suite (north-star) —
     "q18_exact_dedup" -> ((s, d) => DedupOps.exactDedup(s, d)),
-    // q19 (xxhash64 MinHash-LSH, DedupOps.minHashLshPairs) is deliberately
-    // NOT declared: its 2^64-affine hash family cannot be replayed in the
-    // DuckDB oracle, so nine rounds of correctness artifacts carried a
-    // standing `no_oracle` asterisk for one row. The banding OPERATOR is
-    // fully hash-verified through its md5-family twin q55; the xxhash
-    // variant stays exact-Jaccard- and recall-pinned in DedupSpec — the
-    // declared surface is now 100% oracle-checkable by construction.
+    // q19 (an xxhash64 MinHash-LSH variant) was retired: its 2^64-affine
+    // hash family cannot be replayed in the DuckDB oracle. The banding
+    // operator is hash-verified through the md5 family (q55), and its
+    // recall is pinned in DedupSpec.
     "q20_ngram_jaccard" -> ((s, d) => DedupOps.ngramJaccardPairs(s, d, maxBlock = blockCap)),
     "q21_simhash" -> ((s, d) => DedupOps.simHash(s, d)),
     // — similarity search (north-star) —

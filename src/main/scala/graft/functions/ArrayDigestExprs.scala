@@ -41,8 +41,8 @@ case class Md5MinExpr(child: Expression)
   * OpenHashSet + result array PER CANDIDATE PAIR — at sf1+ candidate
   * volumes that allocation churn drove the q114/q122/q175/q178/q261
   * family into run-to-run bimodal GC thrash (same plan, same 417 MB
-  * shuffle, 6× task CPU / 2469 s summed GC in the slow regime — round-17
-  * Scratch probe). Precondition: both arrays ascending; equal-element
+  * shuffle, 6× task CPU / 2469 s summed GC in the slow regime — round 17,
+  * OPTIMIZATION_r17.md). Precondition: both arrays ascending; equal-element
   * runs advance both sides (on distinct-element inputs — which hashed
   * `array_distinct` shingle sets are, modulo the documented ~1e-16
   * 64-bit collision — this equals array_intersect's distinct count). */

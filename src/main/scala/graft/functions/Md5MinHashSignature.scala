@@ -11,17 +11,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * affine remix `(（2p+3)·h + 7p+1) mod (2^31−1)` — small pinned constants
   * over a prime field, every step plain BIGINT SQL.
   *
-  * Exists so the MinHash-LSH *operator* has a DuckDB-checkable variant:
-  * the production-path [[MinHashSignature]] uses xxhash64 + 2^64 affine
-  * remixes (faster base hash, wider family) which no SQL engine
-  * reproduces, leaving its query rows-only-checked. This expression runs
-  * as the same one-pass native loop (|arr| md5s + perms×|arr| integer
-  * mins inside codegen) — only the family differs.
+  * Every declared MinHash-LSH query uses this family, so each one is
+  * hash-checked against the DuckDB oracle. It runs as one native pass
+  * (|arr| md5s + perms×|arr| integer mins inside codegen) instead of the
+  * expression-combinator form (`transform(sequence(0, P-1), p ->
+  * array_min(transform(arr, ...)))`), whose P × |arr| interpreted lambda
+  * calls per row measured 146 s for 10k docs at sf0.1 (xxhash64 base).
   */
 case class Md5MinHashSignature(child: Expression, perms: Int)
     extends UnaryExpression with ExpectsInputTypes {
-  require(perms > 0 && perms <= MinHashSignature.MaxPerms,
-    s"perms must be in [1, ${MinHashSignature.MaxPerms}]")
+  require(perms > 0 && perms <= Md5MinHashSignature.MaxPerms,
+    s"perms must be in [1, ${Md5MinHashSignature.MaxPerms}]")
 
   // covariant override: AbstractDataType itself is private[sql]
   override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
@@ -40,6 +40,7 @@ case class Md5MinHashSignature(child: Expression, perms: Int)
 }
 
 object Md5MinHashSignature {
+  val MaxPerms = 256
   /** 2^31 − 1 (prime). Products stay ≤ ~2^39, BIGINT-safe in any engine. */
   val Mod = 2147483647L
   def mulA(p: Int): Long = 2L * p + 3L

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `list_transform(range(...), i -> array_to_string(list_slice(tk, i, i+n-1), ' '))`,
   * so it is drop-in for oracle-checked queries.
   *
-  * Exists for the same reason as [[MinHashSignature]]: the combinator form
+  * Exists for the same reason as [[Md5MinHashSignature]]: the combinator form
   * evaluates (m-n+1) interpreted lambda calls per row, each allocating a
   * slice array — the dominant cost of the shingling stage at sf0.1. Here
   * it is one generated-code call into a tight JVM loop. Docs shorter than

@@ -6,12 +6,8 @@ import org.apache.spark.sql.{Column, GraftColumnBridge => B}
   * twin of the SQL registration in [[graft.GraftExtensions]]). */
 object native {
   /** Full MinHash signature (array<bigint> of length `perms`) of a shingle
-    * array, in one codegen'd pass. See [[MinHashSignature]]. */
-  def minHashSig(arr: Column, perms: Int): Column =
-    B.column(MinHashSignature(B.expression(arr), perms))
-
-  /** MinHash signature over the oracle-shared md5 + mod-prime family.
-    * See [[Md5MinHashSignature]]. */
+    * array over the oracle-shared md5 + mod-prime family, in one codegen'd
+    * pass. See [[Md5MinHashSignature]]. */
   def md5MinHashSig(arr: Column, perms: Int): Column =
     B.column(Md5MinHashSignature(B.expression(arr), perms))
 

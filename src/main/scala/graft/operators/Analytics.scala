@@ -1199,7 +1199,7 @@ object Analytics {
         Seq("item"), "left")
       .na.fill(0L, Seq("wins"))
       .localCheckpoint()
-    Guards.unpersistCheckpoint(wins) // dirRel/items hold the data now
+    graft.CacheGuard.dropCheckpoint(wins) // dirRel/items hold the data now
     val k = items.agg(count(lit(1)).as("n_items"))
     var pi = items.select($"item", lit(100000000L).as("u"))
     var prevRound: Option[DataFrame] = None
@@ -1221,15 +1221,15 @@ object Analytics {
             $"n_items".cast("double")) * lit(1e8) + lit(0.5))
             .cast("long").as("u"))
         .localCheckpoint() // eager: this IS the round's action
-      prevRound.foreach(Guards.unpersistCheckpoint)
+      prevRound.foreach(graft.CacheGuard.dropCheckpoint)
       prevRound = Some(next)
       pi = next
     }
-    Guards.unpersistCheckpoint(dirRel) // rounds done; output needs items+pi
+    graft.CacheGuard.dropCheckpoint(dirRel) // rounds done; output needs items+pi
     val lastRound = prevRound
     graft.CacheGuard.onRelease { () =>
-      Guards.unpersistCheckpoint(items)
-      lastRound.foreach(Guards.unpersistCheckpoint)
+      graft.CacheGuard.dropCheckpoint(items)
+      lastRound.foreach(graft.CacheGuard.dropCheckpoint)
     }
     items.join(pi, Seq("item"))
       .select($"item".as("event_type"), $"wins", $"n_comps",

@@ -781,7 +781,7 @@ object AnnSearch {
     * sized ObjectHashAggregate on the BUILD side of a BroadcastHashJoin
     * — Catalyst's post-aggregate size estimate undercuts the broadcast
     * threshold, and the single-threaded build of 1.6M object rows
-    * measured 204 s of the 442 s sf10 decade reading (r16 IvfPqProbe
+    * measured 204 s of the 442 s sf10 decade reading (r16 per-step
     * decomposition; the equivalent encode pass is 4 s). No join after
     * the aggregate = nothing left to misestimate. */
   private def pqCodebook(sv: DataFrame, k: Int): DataFrame = {
@@ -1329,61 +1329,6 @@ object AnnSearch {
         (Quant.r4($"g" / lit(1000000.0)) + lit(0.0)).as("adc_dist2"))
       .orderBy($"adc_dist2", $"vec_id")
       .limit(topK)
-  }
-
-  /** Dev seam for [[graft.IvfPqProbe]] (r16): [[ivfPqTopK]]'s n-scale
-    * sub-steps individually actionable, so a decade-probe growth
-    * attributes to a STAGE (coarse assign / codebook train / corpus
-    * encode / full query) instead of a guess. Not a declared query. */
-  def ivfPqProbeSteps(spark: SparkSession, dir: String,
-                      time: (String, () => Long) => Unit,
-                      m: Int = 8, k: Int = 16, nlist: Int = 16): Unit = {
-    import spark.implicits._
-    val eq = graft.CacheGuard.barrier(
-      Tables.embeddings(spark, dir).select($"vec_id",
-        transform($"embedding",
-          x => floor(x.cast("double") * 1000 + lit(0.5)).cast("long"))
-          .as("e")))
-    time("eq_barrier", () => eq.count())
-    val cents: Seq[Seq[Long]] = eq.filter($"vec_id" < nlist)
-      .orderBy($"vec_id").select($"e").as[Seq[Long]].collect().toSeq  // collect-ok: O(codebook) dev probe
-    val centsCol = typedlit(cents)
-    val idots = transform(sequence(lit(1), lit(nlist)), c =>
-      aggregate(zip_with($"e", element_at(centsCol, c), (x, y) => x * y),
-        lit(0L), (a, x) => a + x))
-    val assigned = eq.withColumn("idots", idots)
-      .select($"vec_id",
-        array_position($"idots", array_max($"idots"))
-          .cast("long").as("list_id"))
-    time("coarse_assign", () => assigned.count())
-    val cached = pqSubvectors(spark, dir, m)
-    time("subvectors", () => cached.count())
-    // E-step and M-step of the one Lloyd's update, isolated
-    val cb0 = cached.filter($"vec_id" < k)
-      .select($"sub", ($"vec_id" + 1).as("c"), $"se".as("s"), lit(1L).as("n"))
-    val a1 = pqScored(cached, cb0).groupBy($"vec_id", $"sub")
-      .agg(min_by($"c", struct($"score", $"c")).as("code"))
-    time("estep_assign", () => a1.count())
-    val a1b = graft.CacheGuard.barrier(a1)
-    a1b.count()
-    val mstep = a1b.join(cached, Seq("vec_id", "sub"))
-      .select($"sub", $"code".as("c"), posexplode($"se"))
-      .groupBy($"sub", $"c", ($"pos" + 1).cast("long").as("dim"))
-      .agg(sum($"col").as("sd_sum"), count(lit(1)).as("cnt"))
-      .groupBy($"sub", $"c")
-      .agg(transform(array_sort(collect_list(struct($"dim", $"sd_sum"))),
-          x => x("sd_sum")).as("s"),
-        min($"cnt").as("n"))
-    time("mstep_update", () => mstep.count())
-    val cb1 = pqCodebook(cached, k)
-    time("codebook_train", () => cb1.count())
-    val cb1b = graft.CacheGuard.barrier(cb1)
-    cb1b.count()
-    val enc = pqScored(cached, cb1b).groupBy($"vec_id", $"sub")
-      .agg(min_by($"c", struct($"score", $"c")).as("code"))
-    time("encode_trained", () => enc.count())
-    time("full_q179", () => ivfPqTopK(spark, dir).count())
-    graft.CacheGuard.release()
   }
 
   /** Contrastive TRIPLET mining — the (anchor, positive, negative)

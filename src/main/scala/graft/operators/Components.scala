@@ -6,9 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.Tables
+import graft.CacheGuard.dropCheckpoint
 
 /** Connected components over a near-dup pair graph — the step that turns
-  * PAIRS (q19/q20/q24 output) into dedup CLUSTERS with one keeper each.
+  * PAIRS (q20/q24/q55 output) into dedup CLUSTERS with one keeper each.
   * Pairwise output alone under-deletes: A~B and B~C often come from
   * different blocks with no direct A~C pair, yet all three are one
   * duplicate cluster. Training-corpus dedup keeps min(id) per component.
@@ -25,18 +26,6 @@ import graft.Tables
   * `localCheckpoint` so the plan does not nest every earlier round.
   */
 object Components {
-
-  /** Free the storage blocks behind a `localCheckpoint()`ed Dataset. The
-    * checkpointed plan is a `LogicalRDD` leaf over an RDD persisted
-    * OUTSIDE the CacheManager, so `Dataset.unpersist()` never releases
-    * it — without an explicit release a high-diameter graph accumulates
-    * O(rounds × |nodes|) storage blocks across the iteration. */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** True when `df` is only projections/filters over in-memory leaves (a
     * checkpoint the caller already cut, a local relation) — checkpointing
@@ -81,7 +70,7 @@ object Components {
                               sym: DataFrame) {
     def free(): Unit = {
       graft.CacheGuard.drop(sym)
-      if (!(e0 eq edges)) unpersistCheckpoint(e0)
+      if (!(e0 eq edges)) dropCheckpoint(e0)
     }
   }
   private def symGraph(edges: DataFrame): SymGraph = {
@@ -282,7 +271,7 @@ object Components {
       // cardinality already changed
       val unchanged = smallCount == eCount &&
         e.join(small, Seq("u", "v"), "left_anti").isEmpty
-      unpersistCheckpoint(e)
+      dropCheckpoint(e)
       e = small
       eCount = smallCount
       rounds += 1
@@ -290,7 +279,7 @@ object Components {
     }
     // failure path frees the round's checkpoint blocks itself — the
     // onRelease hook below only registers on the success path
-    if (!converged) { unpersistCheckpoint(e); throw new IllegalStateException(
+    if (!converged) { dropCheckpoint(e); throw new IllegalStateException(
       s"starContractCc did not converge in $maxIter rounds") }
     // the fixpoint forest stores only child → root pointers: the roots
     // (component minima) never appear as children, so they self-label
@@ -298,7 +287,7 @@ object Components {
       .join(e.select($"u".as("node")).distinct(), Seq("node"), "left_anti")
     val out = e.select($"u".as("node"), $"v".as("component"))
       .unionByName(roots.select($"node", $"node".as("component")))
-    graft.CacheGuard.onRelease(() => unpersistCheckpoint(e))
+    graft.CacheGuard.onRelease(() => dropCheckpoint(e))
     (out, rounds)
   }
 
@@ -474,14 +463,14 @@ object Components {
         .select($"dst".as("node"),
           (lit(150000L) + expr("(85 * s) div 100")).as("r"))
         .localCheckpoint() // eager: the round's one action
-      unpersistCheckpoint(ranks)
+      dropCheckpoint(ranks)
       ranks = next
     }
     g.free()
     val out = ranks.join(deg, "node")
       .select($"node", $"deg", $"r")
     graft.CacheGuard.onRelease { () =>
-      unpersistCheckpoint(deg); unpersistCheckpoint(ranks)
+      dropCheckpoint(deg); dropCheckpoint(ranks)
     }
     out
   }
@@ -515,11 +504,11 @@ object Components {
         .agg(max(struct($"cnt", (-$"lbl").as("nl"))).as("m"))
         .select($"dst".as("node"), (-$"m.nl").as("lbl"))
         .localCheckpoint()
-      unpersistCheckpoint(labels)
+      dropCheckpoint(labels)
       labels = next
     }
     g.free()
-    graft.CacheGuard.onRelease(() => unpersistCheckpoint(labels))
+    graft.CacheGuard.onRelease(() => dropCheckpoint(labels))
     labels
   }
 
@@ -585,7 +574,7 @@ object Components {
     val sym = e0.select($"a".as("src"), $"b".as("dst"))
       .unionByName(e0.select($"b".as("src"), $"a".as("dst")))
       .localCheckpoint()
-    if (!(e0 eq edges)) unpersistCheckpoint(e0)
+    if (!(e0 eq edges)) dropCheckpoint(e0)
     def liveEdges(removed: DataFrame): DataFrame = sym
       .join(removed.select($"node".as("src")), Seq("src"), "left_anti")
       .join(removed.select($"node".as("dst")), Seq("dst"), "left_anti")
@@ -602,12 +591,12 @@ object Components {
         .filter($"deg" < k).select($"src".as("node"))
         .localCheckpoint()
       if (dead.isEmpty) {
-        unpersistCheckpoint(dead)
+        dropCheckpoint(dead)
         done = true
       } else {
         val nr = removed.unionByName(dead).localCheckpoint()
-        unpersistCheckpoint(removed)
-        unpersistCheckpoint(dead)
+        dropCheckpoint(removed)
+        dropCheckpoint(dead)
         removed = nr
       }
       r += 1
@@ -617,7 +606,7 @@ object Components {
       .select($"src".as("node"), $"core_degree")
     val (symF, remF) = (sym, removed)
     graft.CacheGuard.onRelease { () =>
-      unpersistCheckpoint(symF); unpersistCheckpoint(remF)
+      dropCheckpoint(symF); dropCheckpoint(remF)
     }
     out
   }
@@ -691,7 +680,7 @@ object Components {
           (coalesce(when($"is_seed", lit(tele)), lit(0L)) +
             expr("(85 * s) div 100")).as("r"))
         .localCheckpoint() // eager: the round's one action
-      unpersistCheckpoint(ranks)
+      dropCheckpoint(ranks)
       ranks = next
     }
     g.free()
@@ -701,8 +690,8 @@ object Components {
         $"r")
     val (degF, ranksF, seedsF) = (deg, ranks, seeds)
     graft.CacheGuard.onRelease { () =>
-      unpersistCheckpoint(degF); unpersistCheckpoint(ranksF)
-      unpersistCheckpoint(seedsF)
+      dropCheckpoint(degF); dropCheckpoint(ranksF)
+      dropCheckpoint(seedsF)
     }
     out
   }
@@ -773,7 +762,7 @@ object Components {
         .select($"node",
           coalesce(expr("(raw * 1000000) div mx"), lit(0L)).as("av"))
         .localCheckpoint()
-      if (auths != null) unpersistCheckpoint(auths)
+      if (auths != null) dropCheckpoint(auths)
       auths = nextA
       val hRaw = ed.join(auths, ed("b") === auths("node"))
         .groupBy(ed("a")).agg(sum($"av").as("raw"))
@@ -783,7 +772,7 @@ object Components {
         .select($"node",
           coalesce(expr("(raw * 1000000) div mx"), lit(0L)).as("h"))
         .localCheckpoint()
-      unpersistCheckpoint(hubs)
+      dropCheckpoint(hubs)
       hubs = nextH
     }
     val out = nodes
@@ -798,8 +787,8 @@ object Components {
     // materialize at the caller's final action
     val (edF, nodesF, authsF, hubsF) = (ed, nodes, auths, hubs)
     graft.CacheGuard.onRelease { () =>
-      unpersistCheckpoint(edF); unpersistCheckpoint(nodesF)
-      unpersistCheckpoint(authsF); unpersistCheckpoint(hubsF)
+      dropCheckpoint(edF); dropCheckpoint(nodesF)
+      dropCheckpoint(authsF); dropCheckpoint(hubsF)
     }
     out
   }
@@ -862,7 +851,7 @@ object Components {
             .when($"nd" < $"d", $"nd")
             .otherwise($"d").as("d"))
         .localCheckpoint()
-      unpersistCheckpoint(dist)
+      dropCheckpoint(dist)
       dist = next
     }
     g.free()
@@ -870,7 +859,7 @@ object Components {
       .select($"node", $"deg", coalesce($"d", lit(-1L)).as("hops"))
     val (degF, distF) = (deg, dist)
     graft.CacheGuard.onRelease { () =>
-      unpersistCheckpoint(degF); unpersistCheckpoint(distF)
+      dropCheckpoint(degF); dropCheckpoint(distF)
     }
     out
   }
@@ -1162,12 +1151,12 @@ object Components {
         .select($"node", $"h_anc".as("anc"),
           ($"depth" + $"h_depth").as("depth"))
         .localCheckpoint()
-      unpersistCheckpoint(ptr)
+      dropCheckpoint(ptr)
       ptr = next
       r += 1
     }
     val out = ptr
-    graft.CacheGuard.onRelease(() => unpersistCheckpoint(out))
+    graft.CacheGuard.onRelease(() => dropCheckpoint(out))
     out
   }
 
@@ -1270,7 +1259,7 @@ object Components {
     // fully run by now; the final compose reads only the labeled and
     // merged leaves, so the pairs blocks are releasable here (the
     // checkpointLeaf hook's later call is a safe no-op)
-    graft.CacheGuard.dropCheckpoint(pairs)
+    dropCheckpoint(pairs)
     labeled
       .join(merged.select($"node".as("old_label"), $"component"),
         Seq("old_label"), "left")
@@ -1308,9 +1297,9 @@ object Components {
     // — as an InMemoryRelation its whole build plan is re-planned (and
     // printed) per reference, and concurrent leaf stages race to fill a
     // cold cache. A localCheckpoint leaf is planned once and scanned.
-    val edges = DedupOps.minHashLshPairsOracled(spark, dir, threshold = threshold)
-      .select($"a", $"b").localCheckpoint()
-    graft.CacheGuard.onRelease(() => unpersistCheckpoint(edges))
+    val edges = graft.CacheGuard.checkpointLeaf(
+      DedupOps.minHashLshPairsOracled(spark, dir, threshold = threshold)
+        .select($"a", $"b"))
     val labels = labelPropagation(edges, iters)
     val sym = edges.select($"a".as("src"), $"b".as("dst"))
       .unionByName(edges.select($"b".as("src"), $"a".as("dst")))
@@ -1326,11 +1315,10 @@ object Components {
     // (Σ_c kic = neighbor count, since every neighbor carries exactly one
     // LPA label), so the cloned subtrees are cache-scan-rooted O(nodes)
     // aggregations instead of corpus-edge re-derivations at ANY scale.
-    val nbr = sym.join(labels.select($"node".as("dst"), $"lbl".as("c")), "dst")
-      .groupBy($"src".as("node"), $"c")
-      .agg(count(lit(1)).as("kic"))
-      .localCheckpoint()
-    graft.CacheGuard.onRelease(() => unpersistCheckpoint(nbr))
+    val nbr = graft.CacheGuard.checkpointLeaf(
+      sym.join(labels.select($"node".as("dst"), $"lbl".as("c")), "dst")
+        .groupBy($"src".as("node"), $"c")
+        .agg(count(lit(1)).as("kic")))
     val deg = nbr.groupBy($"node").agg(sum($"kic").as("k"))
     val stot = labels.join(deg, "node")
       .groupBy($"lbl").agg(sum($"k").as("st"))

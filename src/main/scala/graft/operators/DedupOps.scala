@@ -180,19 +180,6 @@ object DedupOps {
       .orderBy($"keep_doc_id")
   }
 
-  /** MinHash + LSH banding near-dup: `perms` hash permutations → signature;
-    * `bands` bands of `rows` values; candidate pairs share a band; verified
-    * with estimated Jaccard = fraction of matching minhash coordinates ≥
-    * threshold.
-    *
-    * The signature is computed by the native [[graft.functions.MinHashSignature]]
-    * expression — one codegen'd pass per document (each shingle hashed
-    * once, then perms × affine remixes over longs). The combinator
-    * formulation (transform × array_min × xxhash64 per perm) was measured
-    * at 146 s for 10k docs — interpreted HOF lambdas don't codegen — vs
-    * <2 s native. This operator has no SQL oracle (rows-only check), so
-    * the hash family is free to be Spark-native. The only shuffle is the
-    * band self-join at `bands` rows/doc. */
   /** Hot band-block cap for the MinHash pair chains — the q173
     * registration discipline applied to symmetric pair GENERATION: per
     * (band, band-key) block, only the first `bandBlockCap` docs (by
@@ -220,48 +207,16 @@ object DedupOps {
           .partitionBy(col("band"), col(keyCol)).orderBy(col("doc_id"))))
       .filter(col("rk") <= bandBlockCap).drop("rk")
 
-  def minHashLshPairs(spark: SparkSession, dir: String,
-                      shingleN: Int = 3, perms: Int = 32,
-                      bands: Int = 8, threshold: Double = 0.5): DataFrame = {
-    import spark.implicits._
-    val rows = perms / bands
-    // cache() is an optimization barrier: without it CollapseProject
-    // inlines the signature expression into each band-key projection and
-    // both self-join sides. The cached relation is (doc_id, 32×8B) — tiny
-    // relative to the corpus, so the barrier also holds at cluster scale;
-    // the dup copies are projected over it, so each text is hashed once.
-    val sig = withDupCopies(graft.CacheGuard.barrier(
-      shingleArrays(spark, dir, shingleN)
-        .select($"doc_id",
-          graft.functions.native.minHashSig($"arr", perms).as("sig"))))
-    val banded = sig.select($"doc_id", $"sig",
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(slice($"sig", b * rows + 1, lit(rows))))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_key")
-    val cand = registeredBand(banded, "band_key").as("x").join(banded.as("y"),
-        $"x.band" === $"y.band" && $"x.band_key" === $"y.band_key" &&
-          $"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("a"), $"y.doc_id".as("b"),
-        $"x.sig".as("sa"), $"y.sig".as("sb"))
-      .dropDuplicates("a", "b")
-    cand
-      .select($"a", $"b",
-        (sigMatches($"sa", $"sb", perms)
-          .cast("double") / lit(perms.toDouble)).as("est_jaccard"))
-      .filter($"est_jaccard" >= threshold)
-      .select($"a", $"b", Quant.r4($"est_jaccard").as("est_jaccard"))
-      .orderBy($"a", $"b")
-  }
-
-  /** MinHash+LSH banding over the ORACLE-SHARED md5 + mod-prime family —
-    * the DuckDB-checkable twin of [[minHashLshPairs]]. Differences, both
-    * forced by oracle reproducibility and nothing else:
+  /** MinHash + LSH banding near-dup over the ORACLE-SHARED md5 +
+    * mod-prime family: `perms` hash permutations → signature; `bands`
+    * bands of `perms / bands` values; candidate pairs share a band;
+    * verified with estimated Jaccard = fraction of matching minhash
+    * coordinates ≥ threshold.
     *   - signature = [[graft.functions.Md5MinHashSignature]] (md5-h32 base
-    *     hash, `(2p+3)·h + 7p+1 mod 2^31−1` remixes — plain BIGINT SQL);
+    *     hash, `(2p+3)·h + 7p+1 mod 2^31−1` remixes — plain BIGINT SQL),
+    *     one codegen'd pass per doc;
     *   - the band key is the raw signature SLICE joined by array
-    *     equality, not an engine-private hash of the slice.
-    * Same plan shape: one codegen'd signature pass per doc, band-key
-    * candidate self-join, per-pair coordinate-match verification. */
+    *     equality, so DuckDB replays it exactly. */
   def minHashLshPairsOracled(spark: SparkSession, dir: String,
                              shingleN: Int = 3, perms: Int = 16,
                              bands: Int = 4, threshold: Double = 0.5): DataFrame = {
@@ -301,11 +256,9 @@ object DedupOps {
       .select($"doc_id",
         graft.functions.native.md5MinHashSig($"arr", perms).as("sig"))
     val sigCached =
-      if (Tables.unsplittable(spark, dir, "documents")) {
-        val c = sigPlan.localCheckpoint()
-        graft.CacheGuard.onRelease(() => graft.CacheGuard.dropCheckpoint(c))
-        c
-      } else graft.CacheGuard.barrier(sigPlan)
+      if (Tables.unsplittable(spark, dir, "documents"))
+        graft.CacheGuard.checkpointLeaf(sigPlan)
+      else graft.CacheGuard.barrier(sigPlan)
     (md5BandedCandsOver(withDupCopies(sigCached), perms, bands), sigCached)
   }
 
@@ -1361,11 +1314,9 @@ object DedupOps {
     // (one 1-partition fill job; a checkpoint would add nothing and the
     // barrier keeps the sf0.1 plan shape identical to the r17 close).
     val shingled =
-      if (Tables.unsplittable(spark, dir, "documents")) {
-        val c = shingledPlan.localCheckpoint()
-        graft.CacheGuard.onRelease(() => graft.CacheGuard.dropCheckpoint(c))
-        c
-      } else graft.CacheGuard.eagerBarrier(shingledPlan)
+      if (Tables.unsplittable(spark, dir, "documents"))
+        graft.CacheGuard.checkpointLeaf(shingledPlan)
+      else graft.CacheGuard.eagerBarrier(shingledPlan)
     val cand = md5BandedCandsOver(
       withDupCopies(shingled.filter($"sig".isNotNull)
         .select($"doc_id", $"sig")),

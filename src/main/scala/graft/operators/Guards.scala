@@ -6,20 +6,6 @@ import org.apache.spark.sql.functions._
 /** Shared skew guards for candidate-generation operators. */
 object Guards {
 
-  /** Free the storage blocks behind a `localCheckpoint()`ed Dataset. The
-    * checkpointed plan is a `LogicalRDD` leaf over an RDD persisted
-    * OUTSIDE the CacheManager, so `Dataset.unpersist()` never releases
-    * it — an iterative operator that never releases rounds accumulates
-    * O(rounds × |state|) storage blocks (the Components lesson, shared
-    * here for every iterative operator). Only call once the blocks are
-    * provably unreferenced: a localCheckpoint cannot recompute. */
-  def unpersistCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(false)
-      case _ =>
-    }
-
   /** Keep only rows whose `key` value appears at most `maxBlock` times —
     * the hot-block cap every blocked self-join needs (a degenerate key
     * would otherwise make the join quadratic on one cluster partition).

@@ -18,7 +18,7 @@ import graft.Tables
   * remains the tool for streaming joins, aggregation skew, and engines of
   * record where the plan must be deterministic.
   *
-  * MEASURED (round 11, `graft.SkewBench`, BASELINE.md "Salting vs AQE"):
+  * MEASURED (round 11, BASELINE.md "Salting vs AQE"):
   * for BATCH equi-joins of the q38 shape the salt is a net loss — at sf1
   * it shuffles 39.4 MB vs plain SMJ's 10.2 MB (the ×salts dim
   * replication) and runs 1.8× slower than AQE-on plain SMJ, while AQE

@@ -1712,8 +1712,8 @@ object TextAnalysis {
     unigramTrainedCostsWith(spark, dir, uniSeedMulti, uniPruneSchedule)
 
   /** [[unigramTrainedCosts]] at an explicit vocabulary scale (see
-    * [[unigramEncodeFertilityWith]]) — lets `DictProbe`/specs observe
-    * that the scaled path genuinely trains a larger vocabulary. */
+    * [[unigramEncodeFertilityWith]]) — lets specs observe that the
+    * scaled path genuinely trains a larger vocabulary. */
   def unigramTrainedCostsWith(spark: SparkSession, dir: String,
                               seedMulti: Int,
                               schedule: Seq[Int]): DataFrame =
@@ -1798,8 +1798,9 @@ object TextAnalysis {
     unigramEncodeFertilityWith(spark, dir, uniSeedMulti, uniPruneSchedule)
 
   /** [[unigramEncodeFertility]] with an explicit vocabulary scale —
-    * the seam `DictProbe` uses to measure the claimed O(vocabulary) EM
-    * cost by growing seed + prune schedule 10× at fixed corpus size.
+    * the seam `graft.Probe`'s `q298_dict_*` rows use to measure the
+    * claimed O(vocabulary) EM cost by growing seed + prune schedule 10×
+    * at fixed corpus size.
     * Distinct name, all params explicit (the RegistryIntegritySpec
     * overload discipline). */
   def unigramEncodeFertilityWith(spark: SparkSession, dir: String,

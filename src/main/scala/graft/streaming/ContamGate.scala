@@ -41,8 +41,8 @@ object ContamGate {
   def canaryDocs(spark: SparkSession, dir: String): DataFrame =
     canaryDocsWith(spark, dir, CorpusOps.benchMod)
 
-  /** [[canaryDocs]] with an explicit bench modulus — the `DictProbe`
-    * seam: a smaller modulus means more bench docs, i.e. a larger
+  /** [[canaryDocs]] with an explicit bench modulus — the
+    * `graft.Probe` `q299_grams_*` seam: a smaller modulus means more bench docs, i.e. a larger
     * broadcast gram set at fixed corpus size. Distinct name, explicit
     * param (the RegistryIntegritySpec overload discipline). */
   def canaryDocsWith(spark: SparkSession, dir: String,
@@ -102,9 +102,9 @@ object ContamGate {
     contamGateBatchWith(spark, dir, CorpusOps.benchMod)
 
   /** [[contamGateBatch]] at an explicit bench modulus (see
-    * [[canaryDocsWith]]) — `DictProbe` grows the broadcast gram set
-    * ~9× (mod 97 → 11) at fixed corpus size to measure the claimed
-    * O(gram-set) broadcast term. */
+    * [[canaryDocsWith]]) — `graft.Probe`'s `q299_grams_10x` row grows
+    * the broadcast gram set ~9× (mod 97 → 11) at fixed corpus size to
+    * measure the claimed O(gram-set) broadcast term. */
   def contamGateBatchWith(spark: SparkSession, dir: String,
                           benchMod: Long): DataFrame = {
     import spark.implicits._

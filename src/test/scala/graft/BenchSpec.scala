@@ -28,6 +28,16 @@ class BenchSpec extends SparkSpec {
     assert(json.contains(""""err":""") && !json.contains("\n"))
   }
 
+  test("Probe's JSON line renders a failed query as null, never a number, and flags it") {
+    val rs = Bench.measure(spark, sf, Map(
+      "a_ok" -> (good _), "b_broken" -> (bad _)), reps = 1)
+    val (line, failed) = Probe.summary(rs)
+    assert(line.contains(""""b_broken":null"""), line)
+    assert(""""a_ok":\d+\.\d{3}[,}]""".r.findFirstIn(line).nonEmpty, line)
+    assert(failed)
+    assert(!Probe.summary(rs.filter(_.ok))._2)
+  }
+
   test("the result line is parseable shape: one object with total + per-query maps") {
     val json = Bench.run(spark, sf, Map("a_ok" -> (good _)))
     assert(json.startsWith("""{"metric":"total","value":"""))

@@ -195,4 +195,22 @@ class PlanDisciplineSpec extends AnyFunSuite {
     assert(bad.size === 3, bad.mkString("\n"))
     assert(bad.map(_.split(":")(1)) === Seq("1", "2", "4"))
   }
+
+  test("only the harness objects define a main: Verify, Bench, StreamBench, Probe") {
+    // a question about one query goes to graft.Probe, not to a new main
+    // with its own session and listener copy
+    import scala.jdk.CollectionConverters._
+    val objRe = """\bobject\s+(\w+)""".r
+    val mainRe = """\bdef\s+main\s*\(""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val owners = files.flatMap { p =>
+      val text = java.nio.file.Files.readString(p)
+      val objs = objRe.findAllMatchIn(text).map(m => m.start -> m.group(1)).toSeq
+      mainRe.findAllMatchIn(text).map { m =>
+        objs.filter(_._1 < m.start).lastOption.fold(s"<top level of $p>")(_._2)
+      }
+    }
+    assert(owners.sorted === Seq("Bench", "Probe", "StreamBench", "Verify"))
+  }
 }

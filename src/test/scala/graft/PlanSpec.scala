@@ -54,9 +54,9 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"), p)
   }
 
-  test("q19 minhash: native expressions inside the projection (no Python/UDF)") {
-    val p = plan(DedupOps.minHashLshPairs(spark, sf))
-    assert(p.contains("minhash_sig") || p.contains("word_shingles"), p)
+  test("q55 minhash: native expressions inside the projection (no Python/UDF)") {
+    val p = plan(DedupOps.minHashLshPairsOracled(spark, sf))
+    assert(p.contains("md5_minhash_sig") || p.contains("word_shingles"), p)
     assert(!p.contains("BatchEvalPython") && !p.contains("ScalaUDF"), p)
   }
 

@@ -1188,7 +1188,8 @@ class TextAnalysisSpec extends SparkSpec {
     }
     // an EMPTY schedule returns the raw seed vocabulary — the seam is
     // provably not a no-op: seed size flows straight through (a
-    // DictProbe whose knobs were silently ignored would fail here).
+    // dictionary-scaled probe row whose knobs were silently ignored
+    // would fail here).
     // Caps chosen below the spec corpus's ~157 distinct multi-char
     // substrings so the limit is the binding constraint.
     assert(vocabMulti(20, Nil) === 20L)
@@ -1196,8 +1197,8 @@ class TextAnalysisSpec extends SparkSpec {
     // under the FULL schedule, EM re-estimation keeps only pieces USED
     // on best paths, so both runs converge to the data's natural
     // winner set (way below the caps) — the 10x run's extra cost is
-    // carried by its bigger INTERMEDIATE rounds (what DictProbe
-    // measures), while the converged model is corpus-determined, not
+    // carried by its bigger INTERMEDIATE rounds (what the
+    // q298_dict_* probe rows measure), while the converged model is corpus-determined, not
     // knob-determined. Pin that convergence: same used vocabulary.
     val v1 = vocabMulti(uniSeedMulti, uniPruneSchedule)
     val v10 = vocabMulti(uniSeedMulti * 10, uniPruneSchedule.map(_ * 10))

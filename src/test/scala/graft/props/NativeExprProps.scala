@@ -4,7 +4,7 @@ import org.scalacheck.{Gen, Prop, Properties}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{MinHashSignature, SimHashExpr, VectorExprs, WordShinglesExpr}
+import graft.functions.{Md5MinHashSignature, SimHashExpr, VectorExprs, WordShinglesExpr}
 
 /** Algebraic laws of the native expression kernels (static JVM functions —
   * no SparkSession, so hundreds of samples stay cheap). The kernels'
@@ -35,20 +35,20 @@ object NativeExprProps extends Properties("native-exprs") {
       (0 until got.numElements()).map(got.getUTF8String(_).toString) == want
     }
 
-  // ——— MinHashSignature ———
+  // ——— Md5MinHashSignature ———
 
   property("minhash: length = perms, order- and duplicate-invariant (set semantics)") =
     Prop.forAll(Gen.nonEmptyListOf(token), Gen.oneOf(8, 32)) { (ts, perms) =>
-      val base = longs(MinHashSignature.compute(strArr(ts), perms))
-      val shuffled = longs(MinHashSignature.compute(strArr(scala.util.Random.shuffle(ts)), perms))
-      val doubled = longs(MinHashSignature.compute(strArr(ts ++ ts), perms))
+      val base = longs(Md5MinHashSignature.compute(strArr(ts), perms))
+      val shuffled = longs(Md5MinHashSignature.compute(strArr(scala.util.Random.shuffle(ts)), perms))
+      val doubled = longs(Md5MinHashSignature.compute(strArr(ts ++ ts), perms))
       base.length == perms && shuffled == base && doubled == base
     }
 
   property("minhash: adding an element never raises any coordinate") =
     Prop.forAll(Gen.nonEmptyListOf(token), token) { (ts, extra) =>
-      val base = longs(MinHashSignature.compute(strArr(ts), 32))
-      val more = longs(MinHashSignature.compute(strArr(ts :+ extra), 32))
+      val base = longs(Md5MinHashSignature.compute(strArr(ts), 32))
+      val more = longs(Md5MinHashSignature.compute(strArr(ts :+ extra), 32))
       base.zip(more).forall { case (b, m) => m <= b }
     }
 
