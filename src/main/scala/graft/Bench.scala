@@ -526,7 +526,7 @@ object Bench {
     spark.stop()
   }
 
-  /** The bench's session, shared with [[Probe]]: `local[SPARK_GRAFT_CPUS]`
+  /** The bench's session, shared with [[Probe]] and [[Verify]]: `local[SPARK_GRAFT_CPUS]`
     * (default: the machine's cores — the contract is local[32]-class
     * parallelism), shuffle partitions = cores, the graft extensions, a
     * UTC session. */
@@ -541,7 +541,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // the iterative operators (q48/q98/q116) release localCheckpoint
+    // HITS, star contraction and checkpointLeaf release localCheckpoint
     // blocks on purpose; the per-release WARN would land in the stdout
     // tail a harness parses for the one JSON line
     org.apache.logging.log4j.core.config.Configurator.setLevel(

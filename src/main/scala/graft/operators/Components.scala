@@ -1,9 +1,11 @@
 package graft.operators
 
+import scala.reflect.ClassTag
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 import graft.Tables
 import graft.CacheGuard.dropCheckpoint
@@ -18,159 +20,144 @@ import graft.CacheGuard.dropCheckpoint
   * edge list: `label(n) ← min(label(n), min over neighbors label(m))`,
   * repeated until a fixpoint (a count of dropped labels taken by the
   * round's own job, not a collect). Each round is one shuffle keyed by
-  * node id — the standard open-source MapReduce CC shape — run as one
-  * Spark job over co-partitioned RDDs. Rounds needed ≈ graph diameter;
-  * for the log-round variant at extreme diameters use large-star/
-  * small-star contraction ([[starContractCc]]). The other iterative
-  * operators here run DataFrame rounds, each cut with an eager
-  * `localCheckpoint` so the plan does not nest every earlier round.
+  * node id — the standard open-source MapReduce CC shape. Rounds needed
+  * ≈ graph diameter; for the log-round variant at extreme diameters use
+  * large-star/small-star contraction ([[starContractCc]]).
+  *
+  * The neighbor-message operators here (CC, PageRank, personalized
+  * PageRank, label propagation, BFS, k-core) share one round engine,
+  * [[Rounds]]: co-partitioned RDD rounds with no Catalyst plan per round.
+  * HITS, star contraction and pointer doubling run DataFrame rounds, each
+  * cut with an eager `localCheckpoint` so the plan does not nest every
+  * earlier round.
   */
 object Components {
 
-  /** True when `df` is only projections/filters over in-memory leaves (a
-    * checkpoint the caller already cut, a local relation) — checkpointing
-    * such a plan again would only copy blocks, so the iterative operators
-    * skip their defensive entry cut for it. */
-  private def cheapScan(df: DataFrame): Boolean = {
-    val plan = df.queryExecution.analyzed
-    plan.collectLeaves().forall {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _ => false
-    } && !plan.exists {
-      case _: org.apache.spark.sql.catalyst.plans.logical.Join => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.Aggregate => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.Union => true
-      case _: org.apache.spark.sql.catalyst.plans.logical.Window => true
-      case _ => false
-    }
-  }
-
-  /** Shared iterative-operator entry: ONE leaf for the (often expensive)
-    * edge relation, then the symmetrized src→dst list as an eagerly
-    * filled cache barrier pre-partitioned by src (round 18).
-    *
-    *   - the leaf cut: `edges` feeds both symmetrization legs, and as a
-    *     lazy plan those legs are concurrent AQE leaf stages racing to
-    *     compute the pair chain twice (the job probe measured 4
-    *     concurrent 3.4 task-s rebuilds at q279's entry) — at 100 TB
-    *     that is the whole input scanned and shuffled twice;
-    *   - cache, not checkpoint, for sym: a checkpoint leaf forgets its
-    *     physical partitioning (measured UnknownPartitioning in 4.1.2)
-    *     while an InMemoryRelation keeps it, so every round's
-    *     `sym.join(... src === ...)` exchanges only the O(nodes) side —
-    *     one up-front O(edges) shuffle instead of one per round (guide
-    *     §2.1);
-    *   - the eager fill (one count job) stops the first round's
-    *     concurrent leaf stages racing to build a cold cache;
-    *   - e0 stays alive with the cache (an evicted cache partition
-    *     recomputes from its lineage, which is the e0 scan); [[SymGraph.free]]
-    *     releases both once the iteration's output is a leaf. */
-  private case class SymGraph(e0: DataFrame, edges: DataFrame,
-                              sym: DataFrame) {
-    def free(): Unit = {
-      graft.CacheGuard.drop(sym)
-      if (!(e0 eq edges)) dropCheckpoint(e0)
-    }
-  }
-  private def symGraph(edges: DataFrame): SymGraph = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e0 = if (cheapScan(edges)) edges else edges.localCheckpoint()
-    val sym = graft.CacheGuard.barrier(
-      e0.select($"a".as("src"), $"b".as("dst"))
-        .unionByName(e0.select($"b".as("src"), $"a".as("dst")))
-        .repartition($"src"))
-    sym.count()
-    SymGraph(e0, edges, sym)
-  }
-
-  /** Min-label propagation. `edges` has columns (a, b); result is
-    * (node, component) where component = min node id reachable. Edges
-    * with a null endpoint are dropped.
-    *
-    * The rounds run on RDDs, not DataFrames: a DataFrame round pays a
-    * Catalyst plan, AQE's per-stage jobs and a `localCheckpoint` to cut
-    * the plan tower, a fixed cost that outweighs the data on any graph
-    * whose rounds are small. Here:
-    *   - the symmetrized adjacency is built ONCE, hash-partitioned by
-    *     source over `spark.sql.shuffle.partitions` and persisted
-    *     MEMORY_AND_DISK;
-    *   - labels keep that partitioner, so the neighbor join is a narrow
-    *     co-partitioned `cogroup` (which spills) and a round's only
-    *     shuffle is the `reduceByKey` that takes each node's min over its
-    *     own label and its neighbors' (map-side combined);
-    *   - the count of nodes whose label dropped is the action that
-    *     materializes the round, so a round is exactly one Spark job with
-    *     no planning, and the fixpoint test rides it.
-    * Initial labels are min(node, its neighbors): the first hop costs no
-    * round of its own. Each round releases the PREVIOUS round's blocks
-    * once the new round has materialized; the returned labels stay
-    * persisted until `CacheGuard.release`. Unlike a localCheckpoint, an
-    * evicted or lost label block recomputes from the round's shuffle
-    * output, so this is safe on a cluster as it stands; the price is that
-    * the rounds' shuffle files live until the returned relation is
-    * garbage-collected. */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val parts = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
-    val adj = edges
-      .select($"a".cast("long"), $"b".cast("long"))
-      .filter($"a".isNotNull && $"b".isNotNull)
-      .rdd
+  /** The round engine of the neighbor-message operators. A DataFrame
+    * round pays a Catalyst plan, AQE's per-stage jobs and a
+    * `localCheckpoint` to cut the plan tower, a fixed cost that outweighs
+    * the data on any graph whose rounds are small. Here:
+    *   - the symmetrized adjacency (node → neighbor, both directions of
+    *     every (a, b) edge without a null endpoint, duplicates kept) is
+    *     built ONCE from one scan of `edges`, hash-partitioned over
+    *     `spark.sql.shuffle.partitions` and persisted MEMORY_AND_DISK;
+    *   - node state keeps that partitioner, so a round's neighbor step is
+    *     a narrow co-partitioned `cogroup` (which spills), and its only
+    *     shuffle is the map-side-combined `reduceByKey` of the messages
+    *     each node sends;
+    *   - node keys are the edge columns' own values, typed `K` by the
+    *     caller, and the output `node` column keeps their type: word
+    *     strings (q211) work as well as ids.
+    * Fixed-count rounds chain lazily, so the caller's action runs them
+    * all in one job. Fixpoint rounds each run exactly one job, the count
+    * of nodes whose message `moved`, and persist their result; the
+    * previous round's blocks are released once the next has
+    * materialized, and the adjacency once the loop ends. An evicted block
+    * recomputes from its round's shuffle output, so this is safe on a
+    * cluster as it stands; the price is that the rounds' shuffle files
+    * live until the returned relation is garbage-collected. Whatever
+    * stays persisted is freed by `CacheGuard.release`. */
+  private final class Rounds[K: ClassTag](edges: DataFrame) {
+    private val spark = edges.sparkSession
+    private val parts =
+      new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    private val adj: RDD[(K, K)] = edges.select("a", "b").na.drop().rdd
       .flatMap { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
+        val (a, b) = (r.getAs[K](0), r.getAs[K](1))
         Iterator((a, b), (b, a))
       }
       .partitionBy(parts)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels: RDD[(Long, Long)] = adj
-      .reduceByKey(parts, math.min(_, _)) // narrow: adj already has `parts`
-      .mapPartitions(_.map { case (n, m) => (n, math.min(n, m)) },
-        preservesPartitioning = true)
-    var round: RDD[(Long, (Long, Long))] = null // the persisted last round
-    var converged = false
-    var iter = 0
-    try {
-      while (!converged && iter < maxIter) {
-        // each node sends its label to itself, as (label, label), and to
-        // its neighbors, as (label, Long.MinValue): per node, min(label)
-        // is then its new label and max(previous) its old one
-        val next = adj.cogroup(labels)
-          .flatMap { case (n, (nbrs, cs)) =>
-            cs.iterator.flatMap(c => Iterator((n, (c, c))) ++
-              nbrs.iterator.map(d => (d, (c, Long.MinValue))))
-          }
-          .reduceByKey(parts, (x, y) => (math.min(x._1, y._1), math.max(x._2, y._2)))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val prev = round
-        round = next
-        // the round's one job: fills `next` and counts dropped labels;
-        // the previous round's blocks are unreferenced once it has run
-        val changed =
-          try next.filter { case (_, (c, old)) => c < old }.count()
-          finally if (prev != null) prev.unpersist(blocking = false)
-        labels = next.mapValues(_._1)
-        converged = changed == 0L
-        iter += 1
-      }
-    } finally {
+    private var last: RDD[_] = null // the persisted final fixpoint round
+
+    /** Frees the adjacency and the final fixpoint round. */
+    def free(): Unit = {
       adj.unpersist(blocking = false)
-      // exhausting the budget without a fixpoint means labels are WRONG
-      // for nodes farther than maxIter hops from their component's min,
-      // and a failed round leaves nothing to return: free the labels here
-      if (!converged && round != null) round.unpersist(blocking = false)
+      if (last != null) last.unpersist(blocking = false)
     }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds — component " +
-        "diameter exceeds the budget; raise maxIter or switch to " +
-        "large-star/small-star contraction for log-round convergence")
-    // the returned labels read the final round's persisted blocks until the
-    // caller's action has run; CacheGuard.release frees them
-    val last = round
-    graft.CacheGuard.onRelease(() => last.unpersist(blocking = false))
-    labels.toDF("node", "component")
+    graft.CacheGuard.onRelease(() => free())
+
+    /** One state per node, from the node and its neighbors (narrow: the
+      * adjacency already has the round partitioner). */
+    def nodes[S](init: (K, Iterable[K]) => S): RDD[(K, S)] =
+      adj.groupByKey(parts).mapPartitions(
+        _.map { case (n, ns) => (n, init(n, ns)) }, preservesPartitioning = true)
+
+    /** Up to `max` rounds from `state`. In a round every node `send`s
+      * messages given its neighbors and state, the messages to a node
+      * `merge`, and `settle` turns them into its next state; a node that
+      * receives nothing drops out. With `moved` the rounds stop early at
+      * the first round where no node's merged message has moved. Returns
+      * the last state and whether the stop was a fixpoint (always true
+      * without `moved`). */
+    def run[S, M: ClassTag](state: RDD[(K, S)], max: Int)(
+        send: (K, Iterable[K], S) => Iterator[(K, M)])(
+        merge: (M, M) => M, settle: (K, M) => S,
+        moved: Option[M => Boolean] = None): (RDD[(K, S)], Boolean) = {
+      def step(st: RDD[(K, S)]): RDD[(K, M)] = adj.cogroup(st, parts)
+        .flatMap { case (n, (ns, ss)) => ss.iterator.flatMap(send(n, ns, _)) }
+        .reduceByKey(parts, merge)
+      def settled(ms: RDD[(K, M)]): RDD[(K, S)] = ms.mapPartitions(
+        _.map { case (n, m) => (n, settle(n, m)) }, preservesPartitioning = true)
+      moved match {
+        case None =>
+          (Iterator.iterate(state)(st => settled(step(st))).drop(max).next(), true)
+        case Some(f) =>
+          var (st, done, i) = (state, false, 0)
+          try while (!done && i < max) {
+            val ms = step(st).persist(StorageLevel.MEMORY_AND_DISK)
+            val prev = last
+            last = ms
+            // the round's one job: fills `ms` and counts moved nodes; the
+            // previous round's blocks are unreferenced once it has run
+            done = try ms.filter(m => f(m._2)).count() == 0L
+              finally if (prev != null) prev.unpersist(blocking = false)
+            st = settled(ms)
+            i += 1
+          } finally adj.unpersist(blocking = false)
+          (st, done)
+      }
+    }
+
+    /** The state as `(node, cols…)` rows, one per node `emit` accepts. */
+    def frame[S](state: RDD[(K, S)], cols: (String, DataType)*)(
+        emit: PartialFunction[(K, S), Row]): DataFrame =
+      spark.createDataFrame(state.collect(emit), StructType(
+        (("node", edges.schema("a").dataType) +: cols)
+          .map { case (c, t) => StructField(c, t, nullable = false) }))
+  }
+
+  /** `edges` with long endpoints, for the operators that do id
+    * arithmetic on their node keys. */
+  private def longIds(edges: DataFrame): DataFrame =
+    edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b"))
+
+  /** Min-label propagation on [[Rounds]]. `edges` has columns (a, b);
+    * result is (node, component) where component = min node id
+    * reachable. Edges with a null endpoint are dropped. Initial labels
+    * are min(node, its neighbors): the first hop costs no round of its
+    * own. Each round is one Spark job, and the fixpoint test (a count of
+    * nodes whose label dropped) rides it. */
+  def connectedComponents(edges: DataFrame, maxIter: Int = 30): DataFrame = {
+    val g = new Rounds[Long](longIds(edges))
+    val init = g.nodes { (n, ns) => val m = math.min(n, ns.min); (m, m) }
+    // each node sends its label to itself, as (label, label), and to its
+    // neighbors, as (label, Long.MinValue): per node, min(label) is then
+    // its new label and max(previous) its old one
+    val (labels, converged) = g.run(init, maxIter) { (n, ns, s) =>
+      Iterator((n, (s._1, s._1))) ++ ns.iterator.map((_, (s._1, Long.MinValue)))
+    }(merge = (x, y) => (math.min(x._1, y._1), math.max(x._2, y._2)),
+      settle = (_, m) => m, moved = Some(m => m._1 < m._2))
+    if (!converged) {
+      // exhausting the budget without a fixpoint means labels are WRONG
+      // for nodes farther than maxIter hops from their component's min
+      g.free()
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIter rounds — component " +
+          "diameter exceeds the budget; raise maxIter or switch to " +
+          "large-star/small-star contraction for log-round convergence")
+    }
+    g.frame(labels, "component" -> LongType) { case (n, (c, _)) => Row(n, c) }
   }
 
   /** Declared query: collapse a synthetic near-dup CHAIN graph over
@@ -437,43 +424,30 @@ object Components {
     * Float PageRank would hash-diverge on summation order between
     * engines; integer division is order-free. The symmetrized graph has
     * deg ≥ 1 everywhere (no dangling-mass term) and every node receives
-    * ≥ 1 contribution, so the inner join is total.
+    * ≥ 1 contribution, so no node drops out of a round.
     *
-    * Scale shape: one shuffle per round keyed on node id, degrees
-    * computed once and re-joined, eager `localCheckpoint` per round
-    * cutting the plan tower, previous round's blocks released as the
-    * next materializes. Fixed `iters` (no convergence test) keeps it
-    * exactly replayable; rank mass drift per round is bounded by the
-    * floor losses (< deg total). */
+    * Scale shape: [[Rounds]], fixed `iters` chained into the caller's
+    * one job; a node's degree is its neighbor count in the round's
+    * `cogroup`, carried in its state. Fixed `iters` (no convergence test)
+    * keeps it exactly replayable; rank mass drift per round is bounded by
+    * the floor losses (< deg total). Node keys keep the edge columns'
+    * type (q211 ranks word strings). */
   def pageRank(edges: DataFrame, iters: Int = 5): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = symGraph(edges)
-    val sym = g.sym
-    val deg = sym.groupBy($"src".as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    var ranks = deg.select($"node", lit(1000000L).as("r")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contribs = ranks.join(deg, "node")
-        .select($"node", expr("r div deg").as("c"))
-      val next = sym.join(contribs, sym("src") === contribs("node"))
-        .groupBy($"dst")
-        .agg(sum($"c").as("s"))
-        .select($"dst".as("node"),
-          (lit(150000L) + expr("(85 * s) div 100")).as("r"))
-        .localCheckpoint() // eager: the round's one action
-      dropCheckpoint(ranks)
-      ranks = next
+    val g = new Rounds[Any](edges)
+    g.frame(rankRounds(g, iters)(_ => 150000L), "deg" -> LongType, "r" -> LongType) {
+      case (n, (deg, r)) => Row(n, deg, r)
     }
-    g.free()
-    val out = ranks.join(deg, "node")
-      .select($"node", $"deg", $"r")
-    graft.CacheGuard.onRelease { () =>
-      dropCheckpoint(deg); dropCheckpoint(ranks)
-    }
-    out
   }
+
+  /** The integer power iteration of [[pageRank]] and
+    * [[personalizedPageRank]]; node state is (deg, r) and `tele(n)` is
+    * n's per-round teleport mass. */
+  private def rankRounds[K](g: Rounds[K], iters: Int)(
+      tele: K => Long): RDD[(K, (Long, Long))] =
+    g.run(g.nodes((_, ns) => (ns.size.toLong, 1000000L)), iters) { (n, ns, s) =>
+      Iterator((n, (s._1, 0L))) ++ ns.iterator.map((_, (0L, s._2 / s._1)))
+    }(merge = (x, y) => (x._1 + y._1, x._2 + y._2),
+      settle = (n, m) => (m._1, tele(n) + 85L * m._2 / 100L))._1
 
   /** Synchronous label propagation (Raghavan et al. 2007) for community
     * detection over the similarity graph — the clustering signal CC
@@ -482,34 +456,21 @@ object Components {
     * loosely-chained blob). Fixed `iters` synchronous rounds, so the
     * DuckDB oracle replays it as unrolled CTEs; the update is
     * deterministic end-to-end — new label = the neighbor label with the
-    * highest count, ties to the SMALLEST label, computed as an
-    * integer-ordered `max(struct(cnt, -label))` (partial-aggregable; no
+    * highest count, ties to the SMALLEST label, computed as the argmax
+    * of the integer pair (count, −label) over the node's label counts (no
     * window, no rand()).
     *
-    * Scale shape: [[pageRank]]'s — one node-keyed shuffle per round
-    * (neighbor-label count, then per-node argmax, both map-side
-    * partial), eager `localCheckpoint` lineage cut per round, previous
-    * round's blocks released as the next materializes. */
+    * Scale shape: [[Rounds]], fixed `iters` chained into the caller's
+    * one job; a node's messages are per-label neighbor counts, merged
+    * map-side, and its new label is their argmax. */
   def labelPropagation(edges: DataFrame, iters: Int = 3): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = symGraph(edges)
-    val sym = g.sym
-    var labels = sym.select($"src".as("node")).distinct()
-      .select($"node", $"node".as("lbl")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val next = sym.join(labels, sym("src") === labels("node"))
-        .groupBy($"dst", $"lbl").agg(count(lit(1)).as("cnt"))
-        .groupBy($"dst")
-        .agg(max(struct($"cnt", (-$"lbl").as("nl"))).as("m"))
-        .select($"dst".as("node"), (-$"m.nl").as("lbl"))
-        .localCheckpoint()
-      dropCheckpoint(labels)
-      labels = next
-    }
-    g.free()
-    graft.CacheGuard.onRelease(() => dropCheckpoint(labels))
-    labels
+    val g = new Rounds[Long](longIds(edges))
+    val (labels, _) = g.run(g.nodes((n, _) => n), iters) { (_, ns, l) =>
+      ns.iterator.map((_, Map(l -> 1L)))
+    }(merge = (x, y) => y.foldLeft(x) { case (m, (l, c)) =>
+        m.updated(l, m.getOrElse(l, 0L) + c) },
+      settle = (_, counts) => counts.maxBy { case (l, c) => (c, -l) }._1)
+    g.frame(labels, "lbl" -> LongType) { case (n, l) => Row(n, l) }
   }
 
   /** Declared query: 3-round LPA communities on the md5-LSH similarity
@@ -535,80 +496,33 @@ object Components {
     * current degree < k, recompute, repeat.
     *
     * DECLARED semantics are a fixed `rounds`-round peel (the oracle
-    * unrolls the same rounds), with an early exit when the edge count
-    * reaches a fixpoint — equivalent whenever convergence happens within
-    * the budget, which the spec asserts at test scale; at cluster scale
-    * raise `rounds` (each round is one aggregation + two semi-joins, and
-    * real similarity graphs peel in a handful of rounds because whole
-    * fringe layers drop together).
+    * unrolls the same rounds), with an early exit at the first round
+    * that peels nothing — equivalent, since a later round would peel
+    * nothing either; at cluster scale raise `rounds` (each round is one
+    * shuffle, and real similarity graphs peel in a handful of rounds
+    * because whole fringe layers drop together).
     *
-    * Scale shape: the symmetrized edge list materializes ONCE; each
-    * round is one degree aggregation over the live subgraph (map-side
-    * partials) with two `left_anti` probes against the cumulative
-    * node-sized TOMBSTONE set — small enough for AQE to broadcast, and
-    * keyed-joinable at cluster scale. The edge relation is never
-    * rewritten (a shrinking-copy peel re-materializes a corpus-sized
-    * list per round — measured OOM at the sf10 probe's density) and
-    * never sorted; the dead set doubles as the fixpoint signal, and
-    * node tables are lineage-cut per round with block release (the q48
-    * discipline). */
+    * Scale shape: [[Rounds]] to a fixpoint, one job per peel round. The
+    * edge list is never rewritten (a shrinking-copy peel re-materializes
+    * a corpus-sized list per round — measured OOM at the sf10 probe's
+    * density): a node's state is (live, live degree), a live node tells
+    * its neighbors it is live, and the peel marks a node dead once its
+    * degree in the live subgraph is in [1, k). The fixpoint signal is the
+    * count of nodes newly dead. The round after the last peel counts the
+    * degrees against the final dead set, so the loop runs `rounds` + 1
+    * rounds at most and its last state is the output. */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 12): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    // the edge list is materialized ONCE and never rewritten: peeling
-    // maintains a cumulative node TOMBSTONE set instead. The first cut
-    // checkpointed a filtered copy of the edge relation every round —
-    // at the sf10 probe's 128M-row symmetrized list the generation
-    // churn (new 128M-row checkpoint per round while the previous
-    // released asynchronously) exhausted execution memory under 32
-    // concurrent tasks (measured OOM at ~400 GB of cumulative spill).
-    // The tombstone form is also the 100 TB shape: a shrinking-copy
-    // peel would re-materialize a corpus-sized edge list per round,
-    // while tombstones keep per-round state node-sized and
-    // delta-friendly.
-    // one leaf for the edge relation first — the two symmetrization legs
-    // of a lazy plan race to compute the pair chain twice (see symGraph;
-    // sym itself stays a checkpoint here: the peel's anti-join rounds
-    // don't reuse a src partitioning, and sym outlives the loop)
-    val e0 = if (cheapScan(edges)) edges else edges.localCheckpoint()
-    val sym = e0.select($"a".as("src"), $"b".as("dst"))
-      .unionByName(e0.select($"b".as("src"), $"a".as("dst")))
-      .localCheckpoint()
-    if (!(e0 eq edges)) dropCheckpoint(e0)
-    def liveEdges(removed: DataFrame): DataFrame = sym
-      .join(removed.select($"node".as("src")), Seq("src"), "left_anti")
-      .join(removed.select($"node".as("dst")), Seq("dst"), "left_anti")
-    var removed = sym.select($"src".as("node")).limit(0).localCheckpoint()
-    var done = false
-    var r = 0
-    while (!done && r < rounds) {
-      // synchronous round: nodes whose degree in the CURRENT live
-      // subgraph is below k join the tombstones together (matches the
-      // oracle's unrolled rounds); the dead set is also the fixpoint
-      // signal — empty → done, no separate edge-count job
-      val dead = liveEdges(removed)
-        .groupBy($"src").agg(count(lit(1)).as("deg"))
-        .filter($"deg" < k).select($"src".as("node"))
-        .localCheckpoint()
-      if (dead.isEmpty) {
-        dropCheckpoint(dead)
-        done = true
-      } else {
-        val nr = removed.unionByName(dead).localCheckpoint()
-        dropCheckpoint(removed)
-        dropCheckpoint(dead)
-        removed = nr
-      }
-      r += 1
+    val g = new Rounds[Any](edges)
+    val dies = (s: (Boolean, Long)) => s._1 && s._2 > 0 && s._2 < k
+    val (peeled, _) = g.run(g.nodes((_, _) => (true, 0L)), rounds + 1) { (n, ns, s) =>
+      val live = s._1 && !dies(s)
+      Iterator((n, (live, 0L))) ++
+        (if (live) ns.iterator.map((_, (true, 1L))) else Iterator.empty)
+    }(merge = (x, y) => (x._1 && y._1, x._2 + y._2), settle = (_, m) => m,
+      moved = Some(dies))
+    g.frame(peeled, "core_degree" -> LongType) {
+      case (n, (true, d)) if d > 0 => Row(n, d)
     }
-    val out = liveEdges(removed)
-      .groupBy($"src").agg(count(lit(1)).as("core_degree"))
-      .select($"src".as("node"), $"core_degree")
-    val (symF, remF) = (sym, removed)
-    graft.CacheGuard.onRelease { () =>
-      dropCheckpoint(symF); dropCheckpoint(remF)
-    }
-    out
   }
 
   /** Declared query: the k=3 core of the md5-LSH similarity graph at
@@ -648,52 +562,20 @@ object Components {
     * `r' = ⌊85·Σc/100⌋ + (seed ? ⌊0.15·10⁶·|V|/|S|⌋ : 0)`, exact
     * BIGINTs end to end, so the oracle unrolls the same rounds.
     *
-    * Scale shape: identical to [[pageRank]] (one node-keyed shuffle per
-    * round, lineage cuts with block release) plus one broadcast of the
-    * O(seeds) flag relation per round; the two driver-side `count()`s
-    * are O(1)-row actions fixing the teleport constant before the loop. */
+    * Scale shape: identical to [[pageRank]], plus one job before the
+    * rounds counting nodes and seeds to fix the teleport constant. */
   def personalizedPageRank(edges: DataFrame, iters: Int = 5,
                            seedMod: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = symGraph(edges)
-    val sym = g.sym
-    val deg = sym.groupBy($"src".as("node"))
-      .agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val seeds = deg.filter($"node" % seedMod === 0)
-      .select($"node", lit(true).as("is_seed")).localCheckpoint()
-    val nV = deg.count()
-    val nS = seeds.count()
+    val g = new Rounds[Long](longIds(edges))
+    val isSeed = (n: Long) => n % seedMod == 0
+    val bySeed = g.nodes((n, _) => isSeed(n)).values.countByValue()
+    val nS = bySeed.getOrElse(true, 0L)
     require(nS > 0, s"no seed nodes at node % $seedMod == 0")
-    val tele = 150000L * nV / nS
-    var ranks = deg.select($"node", lit(1000000L).as("r")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contribs = ranks.join(deg, "node")
-        .select($"node", expr("r div deg").as("c"))
-      val next = sym.join(contribs, sym("src") === contribs("node"))
-        .groupBy($"dst")
-        .agg(sum($"c").as("s"))
-        .select($"dst".as("node"), $"s")
-        .join(broadcast(seeds), Seq("node"), "left")
-        .select($"node",
-          (coalesce(when($"is_seed", lit(tele)), lit(0L)) +
-            expr("(85 * s) div 100")).as("r"))
-        .localCheckpoint() // eager: the round's one action
-      dropCheckpoint(ranks)
-      ranks = next
+    val tele = 150000L * bySeed.values.sum / nS
+    val ranks = rankRounds(g, iters)(n => if (isSeed(n)) tele else 0L)
+    g.frame(ranks, "deg" -> LongType, "is_seed" -> BooleanType, "r" -> LongType) {
+      case (n, (deg, r)) => Row(n, deg, isSeed(n), r)
     }
-    g.free()
-    val out = ranks.join(deg, "node")
-      .join(broadcast(seeds), Seq("node"), "left")
-      .select($"node", $"deg", coalesce($"is_seed", lit(false)).as("is_seed"),
-        $"r")
-    val (degF, ranksF, seedsF) = (deg, ranks, seeds)
-    graft.CacheGuard.onRelease { () =>
-      dropCheckpoint(degF); dropCheckpoint(ranksF)
-      dropCheckpoint(seedsF)
-    }
-    out
   }
 
   /** Declared query: 5-round personalized PageRank on the md5-LSH
@@ -739,8 +621,8 @@ object Components {
     * 5.1 s standalone against ~0.16 s of parallel task time). Same
     * integers either way: the broadcast build and the main subtree both
     * derive from the half-round's raw relation, exactly as the old
-    * scalar did. Rounds are lineage-cut with block release per the q48
-    * discipline. Nodes with no in-edges hold authority 0 (the LEFT join
+    * scalar did. Rounds are lineage-cut with block release. Nodes with
+    * no in-edges hold authority 0 (the LEFT join
     * against the node universe keeps them); symmetric for hubs. */
   def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
     val spark = edges.sparkSession
@@ -820,48 +702,28 @@ object Components {
     *   d'(v) = min(d(v), 1 + min_{u∼v} d(u))
     * with seeds at 0 and unreached nodes NULL until a neighbor reaches
     * them. All-integer, so the oracle replays the fixed `rounds`
-    * exactly; NULL handling is explicit CASE logic on both engines
+    * exactly. The oracle's NULL handling is explicit CASE logic
     * (DuckDB's `least` NULL semantics differ from Spark's — never rely
-    * on them).
+    * on them); here an unreached node holds Long.MaxValue and sends
+    * nothing, so the min runs over reached neighbors only.
     *
-    * Scale shape: one node-keyed shuffle per round (neighbor min + self
-    * min), as in [[connectedComponents]] but in DataFrame rounds,
-    * lineage-cut with block release; `rounds` bounds the radius
-    * explored, the right knob when anything past k hops is
+    * Scale shape: [[Rounds]], fixed `rounds` chained into the caller's
+    * one job; a node sends its distance to itself and, once reached, its
+    * distance + 1 to its neighbors, and keeps the min. `rounds` bounds the
+    * radius explored, the right knob when anything past k hops is
     * policy-equivalent to unreachable. */
   def bfsHops(edges: DataFrame, seedMod: Int = 20,
               rounds: Int = 5): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val g = symGraph(edges)
-    val sym = g.sym
-    val deg = sym.groupBy($"src".as("node"))
-      .agg(count(lit(1)).as("deg")).localCheckpoint()
-    var dist = deg.select($"node",
-        when($"node" % seedMod === 0, 0L).cast("long").as("d"))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val nb = sym.join(dist, sym("src") === dist("node"))
-        .groupBy($"dst").agg(min($"d").as("nd"))
-        .select($"dst".as("node"), ($"nd" + 1L).as("nd"))
-      val next = dist.join(nb, Seq("node"), "left")
-        .select($"node",
-          when($"d".isNull, $"nd")
-            .when($"nd".isNull, $"d")
-            .when($"nd" < $"d", $"nd")
-            .otherwise($"d").as("d"))
-        .localCheckpoint()
-      dropCheckpoint(dist)
-      dist = next
+    val g = new Rounds[Long](longIds(edges))
+    val far = Long.MaxValue // not reached yet
+    val init = g.nodes((n, ns) => (ns.size.toLong, if (n % seedMod == 0) 0L else far))
+    val (dist, _) = g.run(init, rounds) { (n, ns, s) =>
+      Iterator((n, s)) ++
+        (if (s._2 == far) Iterator.empty else ns.iterator.map((_, (0L, s._2 + 1))))
+    }(merge = (x, y) => (x._1 + y._1, math.min(x._2, y._2)), settle = (_, m) => m)
+    g.frame(dist, "deg" -> LongType, "hops" -> LongType) {
+      case (n, (deg, d)) => Row(n, deg, if (d == far) -1L else d)
     }
-    g.free()
-    val out = dist.join(deg, "node")
-      .select($"node", $"deg", coalesce($"d", lit(-1L)).as("hops"))
-    val (degF, distF) = (deg, dist)
-    graft.CacheGuard.onRelease { () =>
-      dropCheckpoint(degF); dropCheckpoint(distF)
-    }
-    out
   }
 
   /** Declared query: 5-round multi-source BFS on the md5-LSH similarity
@@ -901,9 +763,8 @@ object Components {
   def modularityAudit(spark: SparkSession, dir: String,
                       threshold: Double = 0.2, iters: Int = 3): DataFrame = {
     import spark.implicits._
-    // leaf, not barrier (round 18): LPA's entry, the count, the internal
-    // join, and both degree legs all reference it — and LPA skips its own
-    // defensive entry cut for a leaf
+    // leaf, not barrier (round 18): LPA's adjacency scan, the count, the
+    // internal join, and both degree legs all reference it
     val edges = graft.CacheGuard.checkpointLeaf(
       DedupOps.minHashLshPairsOracled(spark, dir, threshold = threshold)
         .select($"a", $"b"))
@@ -1129,7 +990,7 @@ object Components {
     * relation on its current ancestor key (roots self-loop with hop 0,
     * so converged rows ride through unchanged; the join is total — every
     * ancestor id IS a node — hence inner, never dropping rows). Rounds
-    * are lineage-cut with block release (the [[pageRank]] discipline).
+    * are lineage-cut with block release (the [[hits]] discipline).
     *
     * `nodes` has columns (node: long, parent: long nullable); parent
     * null marks a root. The FIXED round count is part of the declared
@@ -1282,8 +1143,8 @@ object Components {
     * re-assign, and the best target is reported (ties to the smallest
     * community id via the struct-ordered argmax, no window).
     *
-    * Scale shape: LPA labels are [[labelPropagation]]'s one keyed
-    * shuffle per round; on top the audit pays exactly ONE extra
+    * Scale shape: LPA labels are [[labelPropagation]]'s RDD rounds, one
+    * shuffle each, run in the audit's own job; on top the audit pays exactly ONE extra
     * O(edges) aggregation (neighbor-community counts) plus three
     * O(nodes)/O(communities) keyed joins — degree, community degree
     * mass, and the per-node argmax as a partial-aggregable
@@ -1293,7 +1154,8 @@ object Components {
                        threshold: Double = 0.2, iters: Int = 3): DataFrame = {
     import spark.implicits._
     // eager lineage cut, not a cache barrier (round 18): the pair chain
-    // is referenced by LPA, both symmetrization legs, and the edge total
+    // is referenced by LPA's adjacency scan, both symmetrization legs, and
+    // the edge total
     // — as an InMemoryRelation its whole build plan is re-planned (and
     // printed) per reference, and concurrent leaf stages race to fill a
     // cold cache. A localCheckpoint leaf is planned once and scanned.

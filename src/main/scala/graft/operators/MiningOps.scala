@@ -179,9 +179,9 @@ object MiningOps {
     * structure alone.
     *
     * Re-uses [[Components.pageRank]]'s integer-exact power iteration
-    * verbatim — node keys here are the word STRINGS (the rank kernel is
-    * key-type-agnostic: it only groups and joins on the key), so no
-    * word→id dictionary round-trip. Edges: adjacent token pairs from the
+    * verbatim — node keys here are the word STRINGS (its round engine
+    * keys its RDDs on the edge columns' own values and the output keeps
+    * their type), so no word→id dictionary round-trip. Edges: adjacent token pairs from the
     * shared whitespace tokenizer, kept when both sides are ≥4-char purely
     * alphabetic types (the paper's syntactic filter, approximated without
     * a POS tagger), canonicalized a < b and DISTINCT — an unweighted
@@ -190,8 +190,8 @@ object MiningOps {
     * Scale shape: edge extraction is one pass over tokens (O(corpus
     * tokens) rows pre-distinct, O(word-type pairs) after — vocabulary
     * quadratic is never materialized, only OBSERVED adjacencies); the
-    * rank loop is [[Components.pageRank]]'s one keyed shuffle per round
-    * over the O(vocab) node set. The top-k cut is a TakeOrdered, never a
+    * rank loop is [[Components.pageRank]]'s RDD rounds, one shuffle each
+    * over the O(vocab) node set, run in the caller's job. The top-k cut is a TakeOrdered, never a
     * global sort. */
   def textRankKeywords(spark: SparkSession, dir: String,
                        iters: Int = 5, topK: Int = 25): DataFrame = {

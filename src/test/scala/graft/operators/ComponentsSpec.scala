@@ -57,30 +57,13 @@ class ComponentsSpec extends SparkSpec {
     }
   }
 
-  test("per-round checkpoint blocks are released: persisted RDD count stays O(1), not O(rounds)") {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    // a 12-node chain needs multiple propagation rounds
-    val chain = (0L until 12L).map(i => (i, i + 1)).toDF("a", "b")
-    Components.connectedComponents(chain, maxIter = 30).count()
-    val leaked = sc.getPersistentRDDs.keySet -- before
-    // only the RETURNED labels checkpoint may stay pinned (the caller is
-    // still consuming it); every intermediate round + the symmetrized
-    // edge list must have been unpersisted
-    assert(leaked.size <= 1, s"leaked ${leaked.size} persisted RDDs across rounds")
-  }
-
-  test("connectedComponents: at most one Spark job per round plus one, and no SQL execution per round") {
+  /** Spark jobs and SQL executions started while `body` runs. */
+  private def jobsAndSql(body: => Unit): (Int, Int) = {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.GraftBusBridge
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val sc = spark.sparkContext
-    // a 12-node chain 0-1-…-11: diameter 11, so min-label propagation
-    // from self-labels needs at most 11 rounds that drop a label plus
-    // one that finds the fixpoint
-    val chain = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
-    val rounds = 12
     val (jobs, sqlRuns) = (new AtomicInteger, new AtomicInteger)
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
@@ -91,17 +74,82 @@ class ComponentsSpec extends SparkSpec {
     }
     GraftBusBridge.flushListenerBus(sc)
     sc.addSparkListener(l)
-    val comps = try {
-      val c = Components.connectedComponents(chain, maxIter = 30)
-      GraftBusBridge.flushListenerBus(sc)
-      c
-    } finally sc.removeSparkListener(l)
+    try { body; GraftBusBridge.flushListenerBus(sc) }
+    finally sc.removeSparkListener(l)
+    (jobs.get, sqlRuns.get)
+  }
+
+  test("graph operators release every block: O(1) persisted RDDs while read, none after CacheGuard.release") {
+    val sc = spark.sparkContext
+    graft.CacheGuard.release()
+    val before = sc.getPersistentRDDs.keySet
+    // a 12-node chain needs multiple propagation rounds
+    val chain = (0L until 12L).map(i => (i, i + 1)).toDF("a", "b")
+    Components.connectedComponents(chain, maxIter = 30).count()
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    // only the RETURNED labels may stay pinned (the caller is still
+    // consuming them); every intermediate round + the adjacency must have
+    // been unpersisted
+    assert(leaked.size <= 1, s"leaked ${leaked.size} persisted RDDs across rounds")
+    graft.CacheGuard.release()
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "connectedComponents" -> (() => Components.connectedComponents(chain)),
+      "pageRank" -> (() => Components.pageRank(chain)),
+      "personalizedPageRank" -> (() => Components.personalizedPageRank(chain)),
+      "labelPropagation" -> (() => Components.labelPropagation(chain)),
+      "bfsHops" -> (() => Components.bfsHops(chain)),
+      "kCore" -> (() => Components.kCore(chain, k = 2)))
+    for ((name, op) <- ops) {
+      op().collect()
+      graft.CacheGuard.release()
+      assert(sc.getPersistentRDDs.keySet === before, name)
+      assert(graft.CacheGuard.pending === 0, name)
+    }
+  }
+
+  test("connectedComponents: at most one Spark job per round plus one, and no SQL execution per round") {
+    // a 12-node chain 0-1-…-11: diameter 11, so min-label propagation
+    // from self-labels needs at most 11 rounds that drop a label plus
+    // one that finds the fixpoint
+    val chain = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
+    val rounds = 12
+    var comps: org.apache.spark.sql.DataFrame = null
+    val (jobs, sqlRuns) =
+      jobsAndSql { comps = Components.connectedComponents(chain, maxIter = 30) }
     val got = comps.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     graft.CacheGuard.release()
     assert(got === (0L to 11L).map(_ -> 0L).toMap)
-    assert(jobs.get <= rounds + 1, s"${jobs.get} jobs for $rounds rounds")
+    assert(jobs <= rounds + 1, s"$jobs jobs for $rounds rounds")
     // at most the edge input's own execution, whatever the round count
-    assert(sqlRuns.get <= 1, s"${sqlRuns.get} SQL executions")
+    assert(sqlRuns <= 1, s"$sqlRuns SQL executions")
+  }
+
+  test("pageRank, PPR, LPA, BFS: Spark jobs grow at most one per round, SQL executions not at all") {
+    val chain = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
+    val ops: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (n => Components.pageRank(chain, iters = n)),
+      "personalizedPageRank" -> (n => Components.personalizedPageRank(chain, iters = n)),
+      "labelPropagation" -> (n => Components.labelPropagation(chain, iters = n)),
+      "bfsHops" -> (n => Components.bfsHops(chain, rounds = n)))
+    for ((name, op) <- ops) {
+      val Seq((j2, s2), (j6, s6)) = Seq(2, 6).map { n =>
+        val counts = jobsAndSql(op(n).collect())
+        graft.CacheGuard.release()
+        counts
+      }
+      assert(j6 - j2 <= 4, s"$name: $j2 jobs at 2 rounds, $j6 at 6")
+      assert(s6 === s2, s"$name: $s2 SQL executions at 2 rounds, $s6 at 6")
+    }
+  }
+
+  test("kCore: at most one Spark job per peel round on a graph that peels in several") {
+    // at k = 2 a 12-node path loses its two end nodes per round: six
+    // peels, then one round that finds nothing left to peel
+    val path = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
+    val peels = 6
+    val (jobs, _) = jobsAndSql(assert(Components.kCore(path, k = 2).collect().isEmpty))
+    graft.CacheGuard.release()
+    assert(jobs <= peels + 2, s"$jobs jobs for $peels peel rounds")
   }
 
   test("dedupClusters: every doc labeled; chain groups of 5 collapse to min-id keeper") {
@@ -141,6 +189,24 @@ class ComponentsSpec extends SparkSpec {
     graft.CacheGuard.release()
     assert(r.map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSeq ===
       Seq((1L, 1L, 936250L), (2L, 2L, 1127500L), (3L, 1L, 936250L)))
+  }
+
+  test("pageRank: string node keys rank exactly as the same graph's long ids") {
+    // q211 ranks word strings: the key type is the edge columns' own
+    val words = Seq("merge", "join", "shuffle", "spill", "stage", "task")
+    val ids = Seq((0, 1), (0, 2), (1, 2), (2, 3), (3, 4), (4, 5), (3, 5), (0, 5))
+    val byId = Components.pageRank(
+        ids.map { case (a, b) => (a.toLong, b.toLong) }.toDF("a", "b"), iters = 4)
+      .collect().map(r => words(r.getLong(0).toInt) -> ((r.getLong(1), r.getLong(2))))
+      .toMap
+    graft.CacheGuard.release()
+    val byWord = Components.pageRank(
+        ids.map { case (a, b) => (words(a), words(b)) }.toDF("a", "b"), iters = 4)
+    assert(byWord.schema("node").dataType === org.apache.spark.sql.types.StringType)
+    val got = byWord.collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    graft.CacheGuard.release()
+    assert(got === byId)
   }
 
   test("pageRankDocs: rank mass stays near N and the output is exact-consistent") {
