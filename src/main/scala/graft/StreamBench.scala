@@ -25,12 +25,15 @@ import graft.streaming.{FullCurate, FullDoc}
   *   - the JSON line carries the micro-batch duration breakdown summed
   *     from `recentProgress` over the measured window (`addBatch` =
   *     plan+execute incl. foreachBatch body, `walCommit`+`commitOffsets`
-  *     = offset-log fsyncs, `stateCommit` = state-store checkpointing
-  *     of the one fused stateful operator, `queryPlanning` =
-  *     incremental planning) — where the constant goes, not a guess;
+  *     = the offset and commit log entries, each an atomic rename of a
+  *     temp file, `stateCommit` = state-store checkpointing of the one
+  *     fused stateful operator, `queryPlanning` = incremental planning)
+  *     — where the constant goes, not a guess. Every gate starts through
+  *     [[graft.streaming.StreamStart.appendBatches]], so the bench writes
+  *     its checkpoint through the library's checkpoint file manager;
   *   - SPARK_GRAFT_SB_SHUFFLE: shuffle partitions (default = cores).
-  *     This is ALSO the state-store instance count PER stateful
-  *     operator — 32 means 64 store commits per micro-batch;
+  *     This is ALSO the state-store instance count of the one fused
+  *     stateful operator — 32 means 32 store commits per micro-batch;
   *   - SPARK_GRAFT_SB_STORE=rocksdb|hdfs (default hdfs): provider A/B;
   *   - SPARK_GRAFT_SB_COALESCE=N: coalesce the combine output before
   *     the parquet append (1 file/batch vs shuffle-width files);
@@ -83,8 +86,8 @@ object StreamBench {
       coalesceN.fold(out)(out.coalesce)
         .write.mode("append").parquet(outDir)
 
-    import graft.streaming.{MediaGate, MediaDoc, MediaVerdict,
-      SemanticGate, VecDoc, SemVerdict, MultiModalCurate, MmDoc}
+    import graft.streaming.{MediaGate, MediaDoc, SemanticGate, VecDoc,
+      MultiModalCurate, MmDoc, StreamStart}
     val (docIds, mkQuery): (Array[Long], () => (Seq[Long] => Unit, org.apache.spark.sql.streaming.StreamingQuery)) =
       gateKind match {
         case "mm" =>
@@ -104,11 +107,8 @@ object StreamBench {
           val byId = docs.map(d => d.media_id -> d).toMap
           (docs.map(_.media_id), () => {
             val mem = MemoryStream[MediaDoc]
-            val q = MediaGate.gateStream(mem.toDS()).writeStream
-              .outputMode("append").option("checkpointLocation", ckpt)
-              .foreachBatch { (b: org.apache.spark.sql.Dataset[MediaVerdict], _: Long) =>
-                sink(MediaGate.admittedOfBatch(b.toDF())) }
-              .start()
+            val q = StreamStart.appendBatches(MediaGate.gateStream(mem.toDS()), ckpt) {
+              (b, _) => sink(MediaGate.admittedOfBatch(b.toDF())) }
             (ids => { mem.addData(ids.map(byId): _*); q.processAllAvailable() }, q)
           })
         case "semantic" =>
@@ -116,11 +116,8 @@ object StreamBench {
           val byId = docs.map(d => d.vec_id -> d).toMap
           (docs.map(_.vec_id), () => {
             val mem = MemoryStream[VecDoc]
-            val q = SemanticGate.gateStream(mem.toDS()).writeStream
-              .outputMode("append").option("checkpointLocation", ckpt)
-              .foreachBatch { (b: org.apache.spark.sql.Dataset[SemVerdict], _: Long) =>
-                sink(SemanticGate.admittedOfBatch(b.toDF())) }
-              .start()
+            val q = StreamStart.appendBatches(SemanticGate.gateStream(mem.toDS()), ckpt) {
+              (b, _) => sink(SemanticGate.admittedOfBatch(b.toDF())) }
             (ids => { mem.addData(ids.map(byId): _*); q.processAllAvailable() }, q)
           })
         case _ =>

@@ -126,19 +126,15 @@ object CuratePipeline {
   }
 
   /** K2/K3 sink: checkpointed parquet append — restart resumes from the
-    * committed micro-batch. Delivery is AT-LEAST-ONCE on replay: the
+    * committed micro-batch. Started through [[StreamStart.appendBatches]]
+    * (its checkpoint files). Delivery is AT-LEAST-ONCE on replay: the
     * append ignores the batch id, so a crash after the write and before
     * the commit log lands that batch's rows a second time on restart. */
   def parquetAppendSink(ds: Dataset[CuratedDoc], outPath: String,
                         checkpointPath: String): StreamingQuery =
-    ds.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch {
-        (batch: Dataset[CuratedDoc], _: Long) =>
-          batch.write.mode("append").parquet(outPath)
-      }
-      .start()
+    StreamStart.appendBatches(ds, checkpointPath) { (batch, _) =>
+      batch.write.mode("append").parquet(outPath)
+    }
 
   /** Declared q166: the exact relational replay of gate + filter — the
     * curated table the streaming pipeline materializes, computed as one

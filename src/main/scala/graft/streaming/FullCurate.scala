@@ -271,19 +271,18 @@ object FullCurate {
                     sinkPartitions: Option[Int] = None): StreamingQuery =
     sinkVotes(gateStream(docs), floors, outPath, checkpointPath, sinkPartitions)
 
-  /** Votes → [[combineBatch]] → parquet append, for both curation streams. */
+  /** Votes → [[combineBatch]] → parquet append, for both curation
+    * streams, started through [[StreamStart.appendBatches]] (its
+    * checkpoint files and its at-least-once delivery on replay: the
+    * append ignores the batch id). */
   private[streaming] def sinkVotes(votes: Dataset[GateVote], floors: DataFrame,
                                    outPath: String, checkpointPath: String,
                                    sinkPartitions: Option[Int]): StreamingQuery =
-    votes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[GateVote], _: Long) =>
-        val out = combineBatch(batch.toDF(), floors)
-        sinkPartitions.fold(out)(out.coalesce)
-          .write.mode("append").parquet(outPath)
-      }
-      .start()
+    StreamStart.appendBatches(votes, checkpointPath) { (batch, _) =>
+      val out = combineBatch(batch.toDF(), floors)
+      sinkPartitions.fold(out)(out.coalesce)
+        .write.mode("append").parquet(outPath)
+    }
 
   /** The full per-document verdict vector behind q248/q249: every doc of
     * the composed corpus with each stage's independent verdict (package-

@@ -155,14 +155,12 @@ object StreamOps {
   /** K2/K3: incremental append sink with checkpointing — the reference's
     * per-page `to_csv(mode="a")` + cursor files (`tweet_download.py:55–60,
     * 96–100`) become a foreachBatch append writer whose resume point is
-    * the stream checkpoint, not a hand-rolled token file. */
+    * the stream checkpoint, not a hand-rolled token file. Started through
+    * [[StreamStart.appendBatches]] (its checkpoint files). Delivery is
+    * AT-LEAST-ONCE on replay: the append ignores the batch id. */
   def csvAppendSink(df: DataFrame, outPath: String,
                     checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.write.mode("append").option("header", "false").csv(outPath)
-      }
-      .start()
+    StreamStart.appendBatches(df, checkpointPath) { (batch, _) =>
+      batch.write.mode("append").option("header", "false").csv(outPath)
+    }
 }

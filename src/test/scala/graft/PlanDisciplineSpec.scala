@@ -97,6 +97,21 @@ class PlanDisciplineSpec extends AnyFunSuite {
   private val windowRe = """Window\s*\.\s*orderBy""".r
   private val collectRe = """\.(collect\(\)|collectAsList\(\))""".r
 
+  private val writeStreamRe = """\bwriteStream\b""".r
+  private val streamStart = "src/main/scala/graft/streaming/StreamStart.scala"
+
+  /** Code lines calling `writeStream` (comment lines skipped, trailing
+    * comments cut; no waiver: a stream starts through the one helper). */
+  def streamStarts(path: String, text: String): Seq[String] =
+    text.linesIterator.zipWithIndex.flatMap { case (line, i) =>
+      val t = line.trim
+      val ci = q.commentStart(line)
+      val code = if (ci == -1) line else line.substring(0, ci)
+      if (!(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")) &&
+          writeStreamRe.unanchored.matches(code)) Some(s"$path:${i + 1}: $t")
+      else None
+    }.toSeq
+
   test("every unpartitioned Window.orderBy carries a // global-window-ok bound") {
     val bad = engineSources().flatMap { p =>
       val text = java.nio.file.Files.readString(p)
@@ -194,6 +209,32 @@ class PlanDisciplineSpec extends AnyFunSuite {
     val bad = violations("Fixture.scala", fixture, collectRe, "collect-ok")
     assert(bad.size === 3, bad.mkString("\n"))
     assert(bad.map(_.split(":")(1)) === Seq("1", "2", "4"))
+  }
+
+  test("writeStream appears in src/main/scala only inside StreamStart") {
+    // every library stream starts through StreamStart.appendBatches, so
+    // every checkpoint goes through its file manager
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+    val starts = files.flatMap(p => streamStarts(p.toString, java.nio.file.Files.readString(p)))
+    val (helper, bare) = starts.partition(_.startsWith(streamStart + ":"))
+    assert(bare.isEmpty, "streams started outside StreamStart:\n" + bare.mkString("\n"))
+    assert(helper.size === 1, helper.mkString("\n"))
+  }
+
+  test("the stream-start guard catches a bare writeStream") {
+    val fixture =
+      """val q = df.writeStream.format("memory").start()
+        |  * a Scaladoc line naming writeStream is fine
+        |// so is a comment line: df.writeStream
+        |val ok = StreamStart.appendBatches(df, ckpt)(write) // not df.writeStream
+        |val w = df
+        |  .writeStream
+        |val myWriteStream = 1
+        |""".stripMargin
+    val bad = streamStarts("Fixture.scala", fixture)
+    assert(bad.map(_.split(":")(1)) === Seq("1", "6"), bad.mkString("\n"))
   }
 
   test("only the harness objects define a main: Verify, Bench, StreamBench, Probe") {

@@ -108,6 +108,29 @@ class MiningOpsSpec extends SparkSpec {
     assert(ranks === ranks.sorted.reverse, "cut must be rank-descending")
   }
 
+  test("textRankKeywords: a hub-and-chain word graph ranks exactly, ties by word, cut at topK") {
+    // word graph: center–{north, south, east} (a hub with three leaves)
+    // and the chain alpha–bravo–charlie–delta; "the" and "west" are
+    // filtered (short word), and a reversed duplicate adjacency is one edge
+    val tmp = java.nio.file.Files.createTempDirectory("graft-textrank").toString
+    Seq((0L, "center north"), (1L, "Center south"), (2L, "center east"),
+        (3L, "north center"), (4L, "center the west"),
+        (5L, "alpha bravo charlie delta"))
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    def ranked(k: Int) = MiningOps.textRankKeywords(spark, tmp, topK = k).collect()
+      .map(r => (r.getAs[String]("word"), r.getAs[Long]("degree"), r.getAs[Long]("rank_ppm")))
+      .toSeq
+    // five rounds of r' = 150000 + (85 * Σ r(n) div deg(n)) div 100 from
+    // 10^6, replayed by hand
+    assert(ranked(3) === Seq(("center", 3L, 2326646L), ("bravo", 2L, 1302379L),
+      ("charlie", 2L, 1302379L)))
+    assert(ranked(100).map(_._1) === Seq("center", "bravo", "charlie", "alpha",
+      "delta", "east", "north", "south"))
+    graft.CacheGuard.release()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+  }
+
   test("phraseSearch: postings join replays a driver-side adjacent-pair scan exactly") {
     val out = MiningOps.phraseSearch(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") ->

@@ -242,6 +242,64 @@ class FullCurateSpec extends SparkSpec {
     }
   }
 
+  Seq("hdfs" -> "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
+      "rocksdb" -> "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    .foreach { case (name, provider) =>
+    test(s"a checkpoint written by a plain writeStream start (with Hadoop .crc sidecars) resumes through StreamStart on $name: stream ≡ replay, no duplicates") {
+      val sparkS = spark
+      import sparkS.implicits._
+      implicit val sqlCtx = sparkS.sqlContext
+      val key = "spark.sql.streaming.stateStore.providerClass"
+      val prevProvider = spark.conf.getOption(key)
+      spark.conf.set(key, provider)
+      try {
+        val docs = FullCurate.fullDocs(spark, sf).collect().sortBy(_.doc_id)
+        graft.CacheGuard.release()
+        val floors = floorsDf
+        val outDir = java.nio.file.Files.createTempDirectory("graft-fcx-out").toString
+        val ckpt = java.nio.file.Files.createTempDirectory("graft-fcx-ckpt")
+        val mem = MemoryStream[FullDoc]
+        // incarnation 1: three micro-batches through Spark's default
+        // checkpoint file manager on the caller's session
+        val (b1, b2) = docs.splitAt(docs.count(_.doc_id < 100000L))
+        val q1 = FullCurate.gateStream(mem.toDS()).writeStream
+          .outputMode("append")
+          .option("checkpointLocation", ckpt.toString)
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[GateVote], _: Long) =>
+            FullCurate.combineBatch(batch.toDF(), floors)
+              .write.mode("append").parquet(outDir)
+          }
+          .start()
+        b1.grouped(b1.length / 3 + 1).foreach { b =>
+          mem.addData(b.toIndexedSeq: _*)
+          q1.processAllAvailable()
+        }
+        q1.stop()
+        import scala.jdk.CollectionConverters._
+        assert(java.nio.file.Files.walk(ckpt).iterator().asScala
+          .exists(_.getFileName.toString.matches("""\..*\.crc""")),
+          "incarnation 1 wrote no Hadoop sidecar — not the default manager")
+        // incarnation 2: the re-arrivals and edits through the helper
+        val q2 = FullCurate.curatedStream(mem.toDS(), floors, outDir, ckpt.toString)
+        b2.grouped(b2.length / 2 + 1).foreach { b =>
+          mem.addData(b.toIndexedSeq: _*)
+          q2.processAllAvailable()
+        }
+        q2.stop()
+        val written = spark.read.parquet(outDir)
+        val ids = written.select($"doc_id").as[Long].collect()
+        assert(ids.distinct.length === ids.length, "a micro-batch was replayed")
+        val replay = curatedMap(FullCurate.replayBatch(spark, sf))
+        graft.CacheGuard.release()
+        assert(curatedMap(written) === replay)
+        assert(replay.nonEmpty)
+      } finally prevProvider match {
+        case Some(p) => spark.conf.set(key, p)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
+
   test("phaseFunnel: the designed per-phase fate profile holds exactly") {
     val out = FullCurate.phaseFunnel(spark, sf).collect()
       .map(r => r.getAs[String]("phase") -> r).toMap
