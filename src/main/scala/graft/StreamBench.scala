@@ -84,7 +84,8 @@ object StreamBench {
 
     def sink(out: org.apache.spark.sql.DataFrame): Unit =
       coalesceN.fold(out)(out.coalesce)
-        .write.mode("append").parquet(outDir)
+        .write.options(graft.streaming.StreamStart.rawLocalWrite).mode("append")
+        .parquet(outDir)
 
     import graft.streaming.{MediaGate, MediaDoc, SemanticGate, VecDoc,
       MultiModalCurate, MmDoc, StreamStart}

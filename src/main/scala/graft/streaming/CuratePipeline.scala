@@ -133,7 +133,7 @@ object CuratePipeline {
   def parquetAppendSink(ds: Dataset[CuratedDoc], outPath: String,
                         checkpointPath: String): StreamingQuery =
     StreamStart.appendBatches(ds, checkpointPath) { (batch, _) =>
-      batch.write.mode("append").parquet(outPath)
+      batch.write.options(StreamStart.rawLocalWrite).mode("append").parquet(outPath)
     }
 
   /** Declared q166: the exact relational replay of gate + filter — the

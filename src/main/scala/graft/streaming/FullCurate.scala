@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.Tables
@@ -188,7 +189,7 @@ object FullCurate {
   private[streaming] def fusedGates(fused: Dataset[FusedRow]): Dataset[GateVote] = {
     import fused.sparkSession.implicits._
     fused.groupByKey(_.key)
-      .flatMapGroupsWithState[FusedGateState, GateVote](
+      .flatMapGroupsWithState(
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (key: String, it: Iterator[FusedRow],
          state: GroupState[FusedGateState]) =>
@@ -233,8 +234,21 @@ object FullCurate {
                 GateVote(v.vec_id, "", "", 0L, 0L, "sem",
                   v.colliders.nonEmpty))
           }
-      }
+      }(gateStateEncoder, implicitly[Encoder[GateVote]])
   }
+
+  /** [[fusedGates]]' state encoder, resolved and bound once. Spark
+    * resolves the state encoder again for every micro-batch's operator,
+    * and resolving names each collection loop of the deserializer anew
+    * (`MapObjects` lambda variable ids), so the state deserializer's
+    * generated code differed in every micro-batch: each one compiled it
+    * with Janino while the state stage's other tasks waited on the same
+    * code-cache entry, and loaded one more class for the JIT to compile.
+    * A bound encoder resolves to itself, so the code, and its cache
+    * entry, are the same in every micro-batch. The state schema is
+    * unchanged. */
+  private lazy val gateStateEncoder: Encoder[FusedGateState] =
+    ExpressionEncoder[FusedGateState]().resolveAndBind()
 
   /** Batch-local cross-gate combine + stateless quality cut, reading the
     * votes ONCE (a `foreachBatch` batch is uncached: a second read
@@ -281,7 +295,7 @@ object FullCurate {
     StreamStart.appendBatches(votes, checkpointPath) { (batch, _) =>
       val out = combineBatch(batch.toDF(), floors)
       sinkPartitions.fold(out)(out.coalesce)
-        .write.mode("append").parquet(outPath)
+        .write.options(StreamStart.rawLocalWrite).mode("append").parquet(outPath)
     }
 
   /** The full per-document verdict vector behind q248/q249: every doc of

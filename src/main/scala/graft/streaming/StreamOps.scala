@@ -161,6 +161,7 @@ object StreamOps {
   def csvAppendSink(df: DataFrame, outPath: String,
                     checkpointPath: String): org.apache.spark.sql.streaming.StreamingQuery =
     StreamStart.appendBatches(df, checkpointPath) { (batch, _) =>
-      batch.write.mode("append").option("header", "false").csv(outPath)
+      batch.write.options(StreamStart.rawLocalWrite).mode("append")
+        .option("header", "false").csv(outPath)
     }
 }

@@ -65,6 +65,20 @@ class RawLocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
 object StreamStart {
   private[streaming] val fileManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
 
+  /** Writer options for a micro-batch's file append: `file:` paths go
+    * through Hadoop's `RawLocalFileSystem`, uncached (the file-system
+    * cache is keyed by scheme, not conf), so the append and its commit
+    * protocol write no `.crc` sidecars. Through the checksummed local
+    * file system every data file the append created forked a `chmod`,
+    * a cost that follows the host's load rather than the batch's size.
+    * (The raw file system still forks a `chmod` per directory it makes.)
+    * They are writer options, not session conf, because Hadoop's
+    * `FileSystem.getLocal`, which RocksDB's state upload calls, requires
+    * `fs.file.impl` to be a `LocalFileSystem`. */
+  val rawLocalWrite: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[RawLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** `ds.writeStream` in append mode, checkpointed at `checkpointPath`,
     * handing each micro-batch to `write`, started.
     *
@@ -73,6 +87,9 @@ object StreamStart {
     * never changed. The query is therefore registered with the clone's
     * `streams`, not the caller's: drive and watch it through the
     * returned handle.
+    *
+    * A `write` that appends files passes [[rawLocalWrite]] to its
+    * writer, as the library's sinks do.
     *
     * Delivery is AT-LEAST-ONCE on replay: `write` gets the batch id, but
     * a crash after it wrote and before the commit log lands that batch

@@ -161,6 +161,29 @@ class FullCurateSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("later micro-batches generate no code: the fused gates' state deserializer compiles once") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    val docs = FullCurate.fullDocs(spark, sf).collect().sortBy(_.doc_id).take(100)
+    graft.CacheGuard.release()
+    val outDir = java.nio.file.Files.createTempDirectory("graft-fcg-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-fcg-ckpt").toString
+    val mem = MemoryStream[FullDoc]
+    val q = FullCurate.curatedStream(mem.toDS(), floorsDf, outDir, ckpt)
+    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    try {
+      val counts = docs.grouped(20).map { b =>
+        mem.addData(b.toIndexedSeq: _*)
+        q.processAllAvailable()
+        compiled.getCount
+      }.toSeq
+      // the first micro-batches compile the plans; every later one finds
+      // all of its code, the state deserializer's included, in the cache
+      assert(counts.drop(1).distinct.length === 1, counts.mkString(", "))
+    } finally q.stop()
+  }
+
   test("combineBatch on hand-built votes: admitted iff no gate blocked, in token bounds and at the floor") {
     val sparkS = spark
     import sparkS.implicits._

@@ -35,31 +35,32 @@ class StreamStartSpec extends SparkSpec {
   }
 
   /** The curation stream over its first 60 docs in three micro-batches:
-    * the checkpoint root, the caller's file-manager conf before and after
-    * the start, and whether the caller's `streams` listed the query. */
-  private lazy val curated: (JPath, Option[String], Option[String], Boolean) = {
+    * the checkpoint root, the sink's output directory, the caller's
+    * file-manager conf before and after the start, and whether the
+    * caller's `streams` listed the query. */
+  private lazy val curated: (JPath, JPath, Option[String], Option[String], Boolean) = {
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx = sparkS.sqlContext
     val docs = FullCurate.fullDocs(spark, sf).collect().sortBy(_.doc_id).take(60)
     graft.CacheGuard.release()
     val floors = Seq(("none", 0L)).toDF("source", "thr_u4")
-    val out = Files.createTempDirectory("graft-ss-out").toString
+    val out = Files.createTempDirectory("graft-ss-out")
     val ckpt = Files.createTempDirectory("graft-ss-ckpt")
     val before = spark.conf.getOption(StreamStart.fileManagerConf)
     val mem = MemoryStream[FullDoc]
-    val q = FullCurate.curatedStream(mem.toDS(), floors, out, ckpt.toString)
+    val q = FullCurate.curatedStream(mem.toDS(), floors, out.toString, ckpt.toString)
     val after = spark.conf.getOption(StreamStart.fileManagerConf)
     val listed = spark.streams.get(q.id) != null
     try docs.grouped(20).foreach { b =>
       mem.addData(b.toIndexedSeq: _*)
       q.processAllAvailable()
     } finally q.stop()
-    (ckpt, before, after, listed)
+    (ckpt, out, before, after, listed)
   }
 
   test("starting a curation stream leaves the caller's session conf unchanged") {
-    val (_, before, after, listed) = curated
+    val (_, _, before, after, listed) = curated
     assert(before === None)
     assert(after === before)
     // the query runs on the clone, so the caller's `streams` never lists it
@@ -67,7 +68,7 @@ class StreamStartSpec extends SparkSpec {
   }
 
   test("a curation stream's checkpoint holds no Hadoop .crc sidecar in offsets/, commits/ or state/") {
-    val (ckpt, _, _, _) = curated
+    val (ckpt, _, _, _, _) = curated
     val trees = Seq("offsets", "commits", "state").map(ckpt.resolve)
     trees.foreach(t => assert(Files.isDirectory(t), s"missing $t"))
     val written = trees.flatMap(files)
@@ -78,6 +79,16 @@ class StreamStartSpec extends SparkSpec {
     // state files stay checksummed, by Spark's own checksum files
     val deltas = written.filter(_.getFileName.toString.endsWith(".delta"))
     assert(deltas.forall(d => Files.exists(d.resolveSibling(d.getFileName.toString + ".crc"))))
+  }
+
+  test("a curation stream's parquet appends write no Hadoop .crc sidecar, and read back") {
+    val (_, out, _, _, _) = curated
+    val written = files(out)
+    assert(written.exists(_.getFileName.toString.endsWith(".parquet")))
+    assert(written.exists(_.getFileName.toString == "_SUCCESS"))
+    val sidecars = written.filter(hadoopSidecar)
+    assert(sidecars.isEmpty, sidecars.mkString("\n"))
+    assert(spark.read.parquet(out.toString).count() > 0)
   }
 
   test("the manager writes file: paths through the raw local file system and hands other schemes to Spark's default") {
