@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables
@@ -180,6 +180,9 @@ object BloomGate {
             state.getOption.getOrElse(Vector.fill(words)(0)), m, k)
           state.update(w)
           out.iterator
-      }
+      }(stateEncoder, implicitly[Encoder[GateVerdict]])
   }
+
+  /** The Bloom words' state encoder (see [[StateEncoders]]). */
+  private lazy val stateEncoder: Encoder[Vector[Int]] = StateEncoders.bound[Vector[Int]]
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.Tables
@@ -88,11 +88,23 @@ object CuratePipeline {
     * driver-side map the streaming gate broadcasts — the production
     * artifact of [[TextAnalysis.sourceQualityFloor]], derived from the
     * HISTORY corpus so it is deterministic and replayable. */
-  def qualityFloors(spark: SparkSession, dir: String): Map[String, Long] = {
-    import spark.implicits._
-    TextAnalysis.sourceQualityFloor(spark, dir)
-      .select($"source", $"thr_u4").as[(String, Long)]
-      .collect().toMap  // collect-ok: O(sources) threshold table
+  def qualityFloors(spark: SparkSession, dir: String): Map[String, Long] =
+    collectFloors(TextAnalysis.sourceQualityFloor(spark, dir))
+
+  /** A floor table (`source`, `thr_u4`) as the map both curation streams
+    * cut against, collected once when a stream starts. A null `thr_u4`
+    * is floor 0 and a null source matches no document, as in the
+    * replay's left join; a source listed twice is rejected, since a
+    * join would have admitted its documents once per row. */
+  def collectFloors(floors: DataFrame): Map[String, Long] = {
+    val rows = floors.filter(col("source").isNotNull)
+      .select(col("source"), coalesce(col("thr_u4").cast("long"), lit(0L)))
+      .collect()  // collect-ok: O(sources) floor table
+    val sources = rows.map(_.getString(0))
+    require(sources.distinct.length == sources.length,
+      "floor table lists a source more than once: " +
+        sources.diff(sources.distinct).distinct.sorted.mkString(", "))
+    rows.map(r => r.getString(0) -> r.getLong(1)).toMap
   }
 
   /** Gate + filter over a (batch or streaming) `Dataset[PipeDoc]`: one
@@ -122,8 +134,11 @@ object CuratePipeline {
               d.n_tokens >= minTokens && d.n_tokens < maxTokens &&
               d.q_u4 >= floors.getOrElse(d.source, 0L))
             .map(d => CuratedDoc(d.doc_id, d.source, d.fp, d.n_tokens, d.q_u4))
-      }
+      }(stateEncoder, implicitly[Encoder[CuratedDoc]])
   }
+
+  /** The Bloom words' state encoder (see [[StateEncoders]]). */
+  private lazy val stateEncoder: Encoder[Vector[Int]] = StateEncoders.bound[Vector[Int]]
 
   /** K2/K3 sink: checkpointed parquet append — restart resumes from the
     * committed micro-batch. Started through [[StreamStart.appendBatches]]

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.Tables
@@ -48,7 +47,8 @@ case class FusedGateState(bloom: Vector[Int], sigs: Seq[SigDoc],
   *     → EXACT gate   (q94 per-source Bloom `GroupState` fold)
   *     → NEAR-DUP gate (q173 per-(band, slice) `GroupState` fold)
   *     → QUALITY cut  (q26 token bounds + q168 per-source p25 floors,
-  *                     stateless against the broadcast history table)
+  *                     stateless against the history table, read once
+  *                     when the stream starts)
   *     → checkpointed parquet append.
   *
   * The two stateful stages key DIFFERENTLY (source vs band slice); they
@@ -91,8 +91,11 @@ case class FusedGateState(bloom: Vector[Int], sigs: Seq[SigDoc],
   * (1 + `bands` rows/doc) and once on doc_id for the combine; state is
   * O(sources × m/32) Bloom words + O(real collision groups × cap ×
   * perms) band longs, one state-store commit cycle per micro-batch; the
-  * floor table is O(sources) broadcast. The replay's shuffles are the
-  * q94 and q173 audited shapes plus one doc_id join.
+  * floor table is O(sources) entries, collected once when the stream
+  * starts and carried into every micro-batch's plan as a map literal,
+  * so a micro-batch runs one Spark job and broadcasts nothing. The
+  * replay's shuffles are the q94 and q173 audited shapes plus one
+  * doc_id join.
   *
   * A checkpoint written before the gates were fused (two stateful
   * operators, state keyed by source and by (band, slice)) cannot be
@@ -237,27 +240,20 @@ object FullCurate {
       }(gateStateEncoder, implicitly[Encoder[GateVote]])
   }
 
-  /** [[fusedGates]]' state encoder, resolved and bound once. Spark
-    * resolves the state encoder again for every micro-batch's operator,
-    * and resolving names each collection loop of the deserializer anew
-    * (`MapObjects` lambda variable ids), so the state deserializer's
-    * generated code differed in every micro-batch: each one compiled it
-    * with Janino while the state stage's other tasks waited on the same
-    * code-cache entry, and loaded one more class for the JIT to compile.
-    * A bound encoder resolves to itself, so the code, and its cache
-    * entry, are the same in every micro-batch. The state schema is
-    * unchanged. */
+  /** [[fusedGates]]' state encoder (see [[StateEncoders]]). */
   private lazy val gateStateEncoder: Encoder[FusedGateState] =
-    ExpressionEncoder[FusedGateState]().resolveAndBind()
+    StateEncoders.bound[FusedGateState]
 
   /** Batch-local cross-gate combine + stateless quality cut, reading the
     * votes ONCE (a `foreachBatch` batch is uncached: a second read
     * re-runs the stateful operator and its commits): one
     * `groupBy(doc_id)` takes "any gate blocked" and the features of the
-    * doc's one exact vote, then token bounds and the per-source floor
-    * (broadcast O(sources) table; an unknown source admits at floor 0 —
-    * the q166 rule). */
-  def combineBatch(votes: DataFrame, floors: DataFrame): DataFrame = {
+    * doc's one exact vote, then token bounds and the per-source floor.
+    * `floors` is the O(sources) table as a map (see
+    * [[CuratePipeline.collectFloors]]), looked up in the plan as a
+    * literal: no join, no broadcast, no second job. An unknown source
+    * admits at floor 0 (the q166 rule). */
+  def combineBatch(votes: DataFrame, floors: Map[String, Long]): DataFrame = {
     val spark = votes.sparkSession
     import spark.implicits._
     votes.groupBy($"doc_id")
@@ -266,20 +262,19 @@ object FullCurate {
           struct($"source", $"fp", $"n_tokens", $"q_u4"))).as("d"))
       .filter(!$"blocked" && $"d".isNotNull)
       .select($"doc_id", $"d.*")
-      .join(broadcast(floors), Seq("source"), "left")
       .filter($"n_tokens" >= minTokens && $"n_tokens" < maxTokens &&
-        $"q_u4" >= coalesce($"thr_u4", lit(0L)))
-      .select($"doc_id", $"source", $"fp", $"n_tokens", $"q_u4")
+        $"q_u4" >= coalesce(try_element_at(typedLit(floors), $"source"), lit(0L)))
   }
 
   /** The end-to-end streaming pipeline: gates → combine → checkpointed
     * parquet append (K2/K3 — restart resumes from the committed
-    * micro-batch). `sinkPartitions` optionally coalesces the combine
-    * output before the append — a micro-batch's curated slice is tiny
-    * relative to the shuffle width, and one file per batch beats
-    * shuffle-partition-many empty-ish files through the Hadoop commit
-    * protocol (measured in `StreamBench`; None preserves the plan
-    * width for corpus-sized batches). */
+    * micro-batch). `floors` (`source`, `thr_u4`) is read once, when the
+    * stream starts; a new floor table needs a restart. `sinkPartitions`
+    * optionally coalesces the combine output before the append — a
+    * micro-batch's curated slice is tiny relative to the shuffle width,
+    * and one file per batch beats shuffle-partition-many empty-ish files
+    * through the Hadoop commit protocol (measured in `StreamBench`; None
+    * preserves the plan width for corpus-sized batches). */
   def curatedStream(docs: Dataset[FullDoc], floors: DataFrame,
                     outPath: String, checkpointPath: String,
                     sinkPartitions: Option[Int] = None): StreamingQuery =
@@ -288,15 +283,18 @@ object FullCurate {
   /** Votes → [[combineBatch]] → parquet append, for both curation
     * streams, started through [[StreamStart.appendBatches]] (its
     * checkpoint files and its at-least-once delivery on replay: the
-    * append ignores the batch id). */
+    * append ignores the batch id). The floor table is collected here,
+    * once, before the start. */
   private[streaming] def sinkVotes(votes: Dataset[GateVote], floors: DataFrame,
                                    outPath: String, checkpointPath: String,
-                                   sinkPartitions: Option[Int]): StreamingQuery =
+                                   sinkPartitions: Option[Int]): StreamingQuery = {
+    val floorMap = CuratePipeline.collectFloors(floors)
     StreamStart.appendBatches(votes, checkpointPath) { (batch, _) =>
-      val out = combineBatch(batch.toDF(), floors)
+      val out = combineBatch(batch.toDF(), floorMap)
       sinkPartitions.fold(out)(out.coalesce)
         .write.options(StreamStart.rawLocalWrite).mode("append").parquet(outPath)
     }
+  }
 
   /** The full per-document verdict vector behind q248/q249: every doc of
     * the composed corpus with each stage's independent verdict (package-

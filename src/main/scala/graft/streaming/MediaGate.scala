@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -137,8 +137,12 @@ object MediaGate {
             state.getOption.map(_.entries).getOrElse(Seq.empty), bk)
           state.update(MediaGateState(entries))
           out.iterator
-      }
+      }(stateEncoder, implicitly[Encoder[MediaVerdict]])
   }
+
+  /** The band history's state encoder (see [[StateEncoders]]). */
+  private lazy val stateEncoder: Encoder[MediaGateState] =
+    StateEncoders.bound[MediaGateState]
 
   /** Cross-arm combine over ONE micro-batch's stage-1 output: distinct
     * colliders across arms → admitted iff none. Run inside

@@ -147,7 +147,9 @@ object MultiModalCurate {
 
   /** The end-to-end streaming pipeline: five gates → batch-local combine
     * (admitted iff NO gate voted blocked, then token bounds + per-source
-    * floor) → checkpointed parquet append — [[FullCurate.sinkVotes]]. */
+    * floor) → checkpointed parquet append — [[FullCurate.sinkVotes]].
+    * `floors` (`source`, `thr_u4`) is read once, when the stream starts;
+    * a new floor table needs a restart. */
   def curatedStream(docs: Dataset[MmDoc], floors: DataFrame,
                     outPath: String, checkpointPath: String,
                     sinkPartitions: Option[Int] = None): StreamingQuery =

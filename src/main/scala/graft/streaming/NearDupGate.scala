@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -127,8 +127,12 @@ object NearDupGate {
             state.getOption.map(_.entries).getOrElse(Seq.empty), key._1)
           state.update(GateGroupState(entries))
           out.iterator
-      }
+      }(stateEncoder, implicitly[Encoder[BandVerdict]])
   }
+
+  /** The band history's state encoder (see [[StateEncoders]]). */
+  private lazy val stateEncoder: Encoder[GateGroupState] =
+    StateEncoders.bound[GateGroupState]
 
   /** Cross-band combine over ONE micro-batch's stage-1 output (every
     * band verdict of a doc shares its micro-batch): distinct colliders

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -154,8 +154,12 @@ object SemanticGate {
             state.getOption.map(_.entries).getOrElse(Seq.empty), bk)
           state.update(SemGateState(entries))
           out.iterator
-      }
+      }(stateEncoder, implicitly[Encoder[SemVerdict]])
   }
+
+  /** The band history's state encoder (see [[StateEncoders]]). */
+  private lazy val stateEncoder: Encoder[SemGateState] =
+    StateEncoders.bound[SemGateState]
 
   /** Cross-arm combine over ONE micro-batch's stage-1 output: distinct
     * colliders across arms → admitted iff none. Run inside

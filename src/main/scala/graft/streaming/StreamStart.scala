@@ -1,15 +1,39 @@
 package graft.streaming
 
+import java.nio.file.{Files => JFiles}
+import java.nio.file.attribute.PosixFilePermissions
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{Dataset, GraftSessionBridge}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.streaming.StreamingQuery
 
+/** Hadoop's `RawLocalFileSystem` with an in-JVM `chmod`.
+  *
+  * Without `libhadoop`, `RawLocalFileSystem.setPermission` forks a
+  * `chmod` process, and the raw file system calls it for every file it
+  * creates and every directory it makes: per micro-batch, on the driver
+  * alone, the offset-log and commit-log temp files, the append's
+  * `_temporary/0` (two directories) and its `_SUCCESS`; on the tasks,
+  * every state-store delta and checksum temp file, every write-task
+  * attempt directory and every data file. Here the mode is set through
+  * `Files.setPosixFilePermissions`, with the same rwx bits `chmod`
+  * would set. A sticky bit, which that call cannot set, takes Hadoop's
+  * own path. */
+class PosixLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit =
+    if (permission.getStickyBit) super.setPermission(p, permission)
+    else JFiles.setPosixFilePermissions(pathToFile(p).toPath,
+      PosixFilePermissions.fromString(Seq(permission.getUserAction,
+        permission.getGroupAction, permission.getOtherAction).map(_.SYMBOL).mkString))
+}
+
 /** The checkpoint file manager of every stream [[StreamStart]] starts.
   *
   * For a `file:` checkpoint it is Spark's `FileSystemBasedCheckpointFileManager`
-  * over Hadoop's `RawLocalFileSystem`; for every other scheme it is
+  * over [[PosixLocalFileSystem]]; for every other scheme it is
   * whatever Spark's `CheckpointFileManager.create` picks by default
   * (`FileContextBasedCheckpointFileManager` where the scheme has one),
   * unchanged.
@@ -40,7 +64,7 @@ class RawLocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     val scheme = Option(path.toUri.getScheme)
       .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
     if (scheme == "file") {
-      conf.setClass("fs.file.impl", classOf[RawLocalFileSystem], classOf[FileSystem])
+      conf.setClass("fs.file.impl", classOf[PosixLocalFileSystem], classOf[FileSystem])
       conf.setBoolean("fs.file.impl.disable.cache", true)
       new FileSystemBasedCheckpointFileManager(path, conf)
     } else {
@@ -66,17 +90,17 @@ object StreamStart {
   private[streaming] val fileManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Writer options for a micro-batch's file append: `file:` paths go
-    * through Hadoop's `RawLocalFileSystem`, uncached (the file-system
-    * cache is keyed by scheme, not conf), so the append and its commit
-    * protocol write no `.crc` sidecars. Through the checksummed local
-    * file system every data file the append created forked a `chmod`,
-    * a cost that follows the host's load rather than the batch's size.
-    * (The raw file system still forks a `chmod` per directory it makes.)
-    * They are writer options, not session conf, because Hadoop's
-    * `FileSystem.getLocal`, which RocksDB's state upload calls, requires
-    * `fs.file.impl` to be a `LocalFileSystem`. */
+    * through [[PosixLocalFileSystem]], uncached (the file-system cache
+    * is keyed by scheme, not conf), so the append and its commit
+    * protocol write no `.crc` sidecars and fork no `chmod`, neither for
+    * the files nor for the directories they make. Through the
+    * checksummed local file system every file the append created forked
+    * a `chmod`, a cost that follows the host's load rather than the
+    * batch's size. They are writer options, not session conf, because
+    * Hadoop's `FileSystem.getLocal`, which RocksDB's state upload calls,
+    * requires `fs.file.impl` to be a `LocalFileSystem`. */
   val rawLocalWrite: Map[String, String] = Map(
-    "fs.file.impl" -> classOf[RawLocalFileSystem].getName,
+    "fs.file.impl" -> classOf[PosixLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
 
   /** `ds.writeStream` in append mode, checkpointed at `checkpointPath`,

@@ -98,19 +98,36 @@ class PlanDisciplineSpec extends AnyFunSuite {
   private val collectRe = """\.(collect\(\)|collectAsList\(\))""".r
 
   private val writeStreamRe = """\bwriteStream\b""".r
+  private val rawLocalFsRe = """\bRawLocalFileSystem\b""".r
   private val streamStart = "src/main/scala/graft/streaming/StreamStart.scala"
 
-  /** Code lines calling `writeStream` (comment lines skipped, trailing
-    * comments cut; no waiver: a stream starts through the one helper). */
-  def streamStarts(path: String, text: String): Seq[String] =
+  /** Code lines naming `name` (comment lines skipped, trailing comments
+    * cut; no waiver: the name belongs to StreamStart alone). */
+  def codeNaming(name: scala.util.matching.Regex)(path: String, text: String): Seq[String] =
     text.linesIterator.zipWithIndex.flatMap { case (line, i) =>
       val t = line.trim
       val ci = q.commentStart(line)
       val code = if (ci == -1) line else line.substring(0, ci)
       if (!(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*")) &&
-          writeStreamRe.unanchored.matches(code)) Some(s"$path:${i + 1}: $t")
+          name.unanchored.matches(code)) Some(s"$path:${i + 1}: $t")
       else None
     }.toSeq
+
+  /** Code lines calling `writeStream`: a stream starts through the one
+    * helper. */
+  def streamStarts(path: String, text: String): Seq[String] =
+    codeNaming(writeStreamRe)(path, text)
+
+  /** Code lines naming Hadoop's `RawLocalFileSystem`: local writes go
+    * through StreamStart's subclass of it, which sets modes in the JVM. */
+  def rawLocalFsUses(path: String, text: String): Seq[String] =
+    codeNaming(rawLocalFsRe)(path, text)
+
+  private def mainSources(): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+  }
 
   test("every unpartitioned Window.orderBy carries a // global-window-ok bound") {
     val bad = engineSources().flatMap { p =>
@@ -214,10 +231,8 @@ class PlanDisciplineSpec extends AnyFunSuite {
   test("writeStream appears in src/main/scala only inside StreamStart") {
     // every library stream starts through StreamStart.appendBatches, so
     // every checkpoint goes through its file manager
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    val starts = files.flatMap(p => streamStarts(p.toString, java.nio.file.Files.readString(p)))
+    val starts = mainSources().flatMap(p =>
+      streamStarts(p.toString, java.nio.file.Files.readString(p)))
     val (helper, bare) = starts.partition(_.startsWith(streamStart + ":"))
     assert(bare.isEmpty, "streams started outside StreamStart:\n" + bare.mkString("\n"))
     assert(helper.size === 1, helper.mkString("\n"))
@@ -237,15 +252,36 @@ class PlanDisciplineSpec extends AnyFunSuite {
     assert(bad.map(_.split(":")(1)) === Seq("1", "6"), bad.mkString("\n"))
   }
 
+  test("RawLocalFileSystem appears in src/main/scala only inside StreamStart") {
+    // a second use would be a local write that forks `chmod` per file and
+    // directory again; StreamStart's PosixLocalFileSystem is the one
+    val uses = mainSources().flatMap(p =>
+      rawLocalFsUses(p.toString, java.nio.file.Files.readString(p)))
+    val (inside, stray) = uses.partition(_.startsWith(streamStart + ":"))
+    assert(stray.isEmpty, "RawLocalFileSystem named outside StreamStart:\n" + stray.mkString("\n"))
+    assert(inside.nonEmpty, "StreamStart no longer names RawLocalFileSystem — scope broke?")
+  }
+
+  test("the raw-file-system guard catches a stray RawLocalFileSystem") {
+    val fixture =
+      """val fs = new org.apache.hadoop.fs.RawLocalFileSystem
+        |  * a Scaladoc line naming RawLocalFileSystem is fine
+        |// so is a comment line: RawLocalFileSystem
+        |val ok = StreamStart.rawLocalWrite // not RawLocalFileSystem
+        |val opts = Map("fs.file.impl" ->
+        |  classOf[RawLocalFileSystem].getName)
+        |val myRawLocalFileSystemFactory = 1
+        |""".stripMargin
+    val bad = rawLocalFsUses("Fixture.scala", fixture)
+    assert(bad.map(_.split(":")(1)) === Seq("1", "6"), bad.mkString("\n"))
+  }
+
   test("only the harness objects define a main: Verify, Bench, StreamBench, Probe") {
     // a question about one query goes to graft.Probe, not to a new main
     // with its own session and listener copy
-    import scala.jdk.CollectionConverters._
     val objRe = """\bobject\s+(\w+)""".r
     val mainRe = """\bdef\s+main\s*\(""".r
-    val files = java.nio.file.Files.walk(java.nio.file.Path.of("src/main/scala"))
-      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
-    val owners = files.flatMap { p =>
+    val owners = mainSources().flatMap { p =>
       val text = java.nio.file.Files.readString(p)
       val objs = objRe.findAllMatchIn(text).map(m => m.start -> m.group(1)).toSeq
       mainRe.findAllMatchIn(text).map { m =>

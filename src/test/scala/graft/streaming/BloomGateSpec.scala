@@ -102,4 +102,16 @@ class BloomGateSpec extends SparkSpec {
     val drops = Seq(64L, 512L, 4096L).map(out(_).getAs[Long]("n_false_drops"))
     assert(drops.last <= drops.head)
   }
+
+  test("later micro-batches generate no code: the Bloom gate's state deserializer compiles once") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val docs = BloomGate.gatedDocs(spark, sf).as[StreamDoc].collect().sortBy(_.doc_id).take(100)
+    graft.CacheGuard.release()
+    val counts = CompileCounts.perBatch(spark, docs.toIndexedSeq, 20)(
+      ds => CompileCounts.noopSink(BloomGate.gateStream(ds)))
+    // the first micro-batches compile the plans; every later one finds
+    // all of its code, the state deserializer's included, in the cache
+    assert(counts.drop(1).distinct.length === 1, counts.mkString(", "))
+  }
 }

@@ -135,4 +135,17 @@ class CuratePipelineSpec extends SparkSpec {
       .map(_.doc_id).sorted.toSeq
     assert(written === Seq(1L, 4L, 7L))
   }
+
+  test("later micro-batches generate no code: the q166 pipeline's state deserializer compiles once") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val docs = CuratePipeline.pipeDocs(spark, sf).collect().sortBy(_.doc_id).take(100)
+    val floors = CuratePipeline.qualityFloors(spark, sf)
+    graft.CacheGuard.release()
+    val counts = CompileCounts.perBatch(spark, docs.toIndexedSeq, 20)(
+      ds => CompileCounts.noopSink(CuratePipeline.curateStream(ds, floors)))
+    // the first micro-batches compile the plans; every later one finds
+    // all of its code, the state deserializer's included, in the cache
+    assert(counts.drop(1).distinct.length === 1, counts.mkString(", "))
+  }
 }

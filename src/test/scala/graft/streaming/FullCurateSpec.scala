@@ -10,6 +10,33 @@ class FullCurateSpec extends SparkSpec {
       (r.getAs[String]("source"), r.getAs[String]("fp"),
         r.getAs[Long]("n_tokens"), r.getAs[Long]("q_u4"))).toMap
 
+  /** Spark jobs started, and the physical plan node names of the SQL
+    * executions started (adaptive re-plans included), while `body` runs. */
+  private def jobsAndPlanNodes(body: => Unit): (Int, Set[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val nodes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    def walk(p: SparkPlanInfo): Unit = { nodes.add(p.nodeName); p.children.foreach(walk) }
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.GraftBusBridge.flushListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    (jobs.get, nodes.asScala.toSet)
+  }
+
   private def floorsDf = graft.operators.TextAnalysis
     .sourceQualityFloor(spark, sf)
     .select("source", "thr_u4")
@@ -164,24 +191,68 @@ class FullCurateSpec extends SparkSpec {
   test("later micro-batches generate no code: the fused gates' state deserializer compiles once") {
     val sparkS = spark
     import sparkS.implicits._
-    implicit val sqlCtx = sparkS.sqlContext
     val docs = FullCurate.fullDocs(spark, sf).collect().sortBy(_.doc_id).take(100)
     graft.CacheGuard.release()
     val outDir = java.nio.file.Files.createTempDirectory("graft-fcg-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-fcg-ckpt").toString
+    val counts = CompileCounts.perBatch(spark, docs.toIndexedSeq, 20)(
+      FullCurate.curatedStream(_, floorsDf, outDir, ckpt))
+    // the first micro-batches compile the plans; every later one finds
+    // all of its code, the state deserializer's included, in the cache
+    assert(counts.drop(1).distinct.length === 1, counts.mkString(", "))
+  }
+
+  test("a curation micro-batch runs one Spark job and broadcasts nothing") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    val docs = FullCurate.fullDocs(spark, sf).collect().sortBy(_.doc_id).take(40)
+    graft.CacheGuard.release()
+    val outDir = java.nio.file.Files.createTempDirectory("graft-fcj-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-fcj-ckpt").toString
     val mem = MemoryStream[FullDoc]
     val q = FullCurate.curatedStream(mem.toDS(), floorsDf, outDir, ckpt)
-    val compiled = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     try {
-      val counts = docs.grouped(20).map { b =>
-        mem.addData(b.toIndexedSeq: _*)
+      mem.addData(docs.take(20).toIndexedSeq: _*)
+      q.processAllAvailable()
+      val (jobs, nodes) = jobsAndPlanNodes {
+        mem.addData(docs.drop(20).toIndexedSeq: _*)
         q.processAllAvailable()
-        compiled.getCount
-      }.toSeq
-      // the first micro-batches compile the plans; every later one finds
-      // all of its code, the state deserializer's included, in the cache
-      assert(counts.drop(1).distinct.length === 1, counts.mkString(", "))
+      }
+      assert(q.recentProgress.count(_.numInputRows > 0) === 2)
+      // the gate exchange, the doc_id combine and the append are one job
+      assert(jobs === 1)
+      assert(nodes.contains("Exchange"), nodes.toSeq.sorted.mkString(", "))
+      assert(!nodes.contains("BroadcastExchange"), nodes.toSeq.sorted.mkString(", "))
     } finally q.stop()
+  }
+
+  test("a floor table that lists a source twice is rejected when the stream starts") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+    val floors = Seq(("a", 40L), ("b", 10L), ("a", 50L)).toDF("source", "thr_u4")
+    val outDir = java.nio.file.Files.createTempDirectory("graft-fcd-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-fcd-ckpt").toString
+    val mem = MemoryStream[FullDoc]
+    val e = intercept[IllegalArgumentException] {
+      FullCurate.curatedStream(mem.toDS(), floors, outDir, ckpt).stop()
+    }
+    assert(e.getMessage.contains("more than once: a"), e.getMessage)
+  }
+
+  test("a null thr_u4 is floor 0, and a null source floors no document") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val floors = Seq[(String, java.lang.Long)](("a", null), ("b", 7L), (null, 99L))
+      .toDF("source", "thr_u4")
+    val floorMap = CuratePipeline.collectFloors(floors)
+    assert(floorMap === Map("a" -> 0L, "b" -> 7L))
+    val votes = Seq(
+      GateVote(1L, "a", "fp1", CuratePipeline.minTokens, 0L, "exact", false),
+      GateVote(2L, "b", "fp2", CuratePipeline.minTokens, 6L, "exact", false))
+    val out = FullCurate.combineBatch(votes.toDF(), floorMap)
+    assert(out.select($"doc_id").as[Long].collect().toSeq === Seq(1L))
   }
 
   test("combineBatch on hand-built votes: admitted iff no gate blocked, in token bounds and at the floor") {
@@ -204,8 +275,7 @@ class FullCurateSpec extends SparkSpec {
       exact(8, q = 39L),                           // below the source floor
       exact(9, q = 40L),                           // at the floor
       exact(10, src = "unlisted", q = 0L))         // unknown source: floor 0
-    val floors = Seq(("a", 40L)).toDF("source", "thr_u4")
-    val out = FullCurate.combineBatch(votes.toDF(), floors)
+    val out = FullCurate.combineBatch(votes.toDF(), Map("a" -> 40L))
     assert(out.columns.toSeq === Seq("doc_id", "source", "fp", "n_tokens", "q_u4"))
     val got = out.collect().map(r => r.getAs[Long]("doc_id") ->
       (r.getAs[String]("source"), r.getAs[String]("fp"),
@@ -279,6 +349,7 @@ class FullCurateSpec extends SparkSpec {
         val docs = FullCurate.fullDocs(spark, sf).collect().sortBy(_.doc_id)
         graft.CacheGuard.release()
         val floors = floorsDf
+        val floorMap = CuratePipeline.collectFloors(floors)
         val outDir = java.nio.file.Files.createTempDirectory("graft-fcx-out").toString
         val ckpt = java.nio.file.Files.createTempDirectory("graft-fcx-ckpt")
         val mem = MemoryStream[FullDoc]
@@ -289,7 +360,7 @@ class FullCurateSpec extends SparkSpec {
           .outputMode("append")
           .option("checkpointLocation", ckpt.toString)
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[GateVote], _: Long) =>
-            FullCurate.combineBatch(batch.toDF(), floors)
+            FullCurate.combineBatch(batch.toDF(), floorMap)
               .write.mode("append").parquet(outDir)
           }
           .start()

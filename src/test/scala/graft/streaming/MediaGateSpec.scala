@@ -170,4 +170,16 @@ class MediaGateSpec extends SparkSpec {
       Seq.empty, "image:0:0")
     assert(v2.find(_.media_id == 2L).get.colliders === Seq(1L))
   }
+
+  test("later micro-batches generate no code: the media gate's state deserializer compiles once") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val docs = MediaGate.mediaDocs(spark, sf).collect().sortBy(_.media_id).take(100)
+    graft.CacheGuard.release()
+    val counts = CompileCounts.perBatch(spark, docs.toIndexedSeq, 20)(
+      ds => CompileCounts.noopSink(MediaGate.gateStream(ds)))
+    // the first micro-batches compile the plans; every later one finds
+    // all of its code, the state deserializer's included, in the cache
+    assert(counts.drop(1).distinct.length === 1, counts.mkString(", "))
+  }
 }

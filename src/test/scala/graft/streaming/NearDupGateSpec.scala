@@ -114,4 +114,23 @@ class NearDupGateSpec extends SparkSpec {
     val (v3, _) = NearDupGate.runFold(Seq(SigDoc(10L, other)), entries, 0, 3)
     assert(v3.head.colliders.isEmpty)
   }
+
+  test("later micro-batches generate no code: the near-dup gate's state deserializer compiles once") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val all = NearDupGate.sigDocs(spark, sf).collect().sortBy(_.doc_id)
+    graft.CacheGuard.release()
+    // 20 originals, then their shifted copies four times over: from the
+    // second micro-batch on, every band group read has registered state
+    // (state is deserialized only for a group that has some)
+    val firsts = all.take(20)
+    val copies = all.filter(d => firsts.exists(_.doc_id + 100000L == d.doc_id))
+    assert(copies.length === firsts.length)
+    val docs = firsts ++ Seq.fill(4)(copies).flatten
+    val counts = CompileCounts.perBatch(spark, docs.toIndexedSeq, 20)(
+      ds => CompileCounts.noopSink(NearDupGate.gateStream(ds)))
+    // the first micro-batches compile the plans; every later one finds
+    // all of its code, the state deserializer's included, in the cache
+    assert(counts.drop(1).distinct.length === 1, counts.mkString(", "))
+  }
 }

@@ -106,4 +106,16 @@ class SemanticGateSpec extends SparkSpec {
     // threshold comparison is on the QUANTIZED value
     assert(SemanticGate.cosR4(x, y) < SemanticGate.tau)
   }
+
+  test("later micro-batches generate no code: the semantic gate's state deserializer compiles once") {
+    val sparkS = spark
+    import sparkS.implicits._
+    val docs = SemanticGate.vecDocs(spark, sf).collect().sortBy(_.vec_id).take(100)
+    graft.CacheGuard.release()
+    val counts = CompileCounts.perBatch(spark, docs.toIndexedSeq, 20)(
+      ds => CompileCounts.noopSink(SemanticGate.gateStream(ds)))
+    // the first micro-batches compile the plans; every later one finds
+    // all of its code, the state deserializer's included, in the cache
+    assert(counts.drop(1).distinct.length === 1, counts.mkString(", "))
+  }
 }

@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{DelegateToFileSystem, FileAlreadyExistsException, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.checkpointing.{FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -120,5 +121,49 @@ class StreamStartSpec extends SparkSpec {
     conf.set(StreamStart.fileManagerConf, classOf[RawLocalCheckpointFileManager].getName)
     val other = new RawLocalCheckpointFileManager(new Path("graftt:///tmp/graft-ss"), conf)
     assert(other.underlying.isInstanceOf[FileContextBasedCheckpointFileManager])
+  }
+
+  /** A path's permission bits, sticky bit included. */
+  private def mode(p: JPath): Int =
+    Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  private def octal(s: String): Int = Integer.parseInt(s, 8)
+
+  test("a curation stream's checkpoint and sink files are 0644 and their directories 0755") {
+    val (ckpt, out, _, _, _) = curated
+    // the roots are the spec's own temp directories
+    val modes = Seq(ckpt, out).flatMap(root =>
+      Files.walk(root).iterator().asScala.filter(_ != root)
+        .map(p => (Files.isDirectory(p), mode(p)))).toSet
+    assert(modes === Set((false, octal("644")), (true, octal("755"))),
+      modes.map { case (d, m) => s"dir=$d ${Integer.toOctalString(m)}" }.mkString(", "))
+  }
+
+  test("PosixLocalFileSystem sets chmod's mode bits in the JVM, and a sticky bit through Hadoop's own path") {
+    def perm(s: String) = new FsPermission(octal(s).toShort)
+    val dir = Files.createTempDirectory("graft-ss-chmod")
+    val conf = new Configuration()
+    val ours = new PosixLocalFileSystem
+    ours.initialize(URI.create("file:///"), conf)
+    // Hadoop's own raw file system forks `chmod` here (no libhadoop)
+    val hadoops = new RawLocalFileSystem
+    hadoops.initialize(URI.create("file:///"), conf)
+    Seq("644", "755", "640", "600").foreach { m =>
+      Seq(true, false).foreach { isDir =>
+        val (a, b) = (dir.resolve(s"ours-$m-$isDir"), dir.resolve(s"hadoop-$m-$isDir"))
+        Seq(a, b).foreach(p => if (isDir) Files.createDirectory(p) else Files.createFile(p))
+        ours.setPermission(new Path(a.toUri), perm(m))
+        hadoops.setPermission(new Path(b.toUri), perm(m))
+        assert(mode(a) === octal(m), s"$a")
+        assert(mode(a) === mode(b), s"$a vs $b")
+      }
+    }
+    // `Files.setPosixFilePermissions` cannot set a sticky bit: it stays set
+    // only if the call took Hadoop's path
+    val sticky = Files.createDirectory(dir.resolve("sticky"))
+    ours.setPermission(new Path(sticky.toUri), perm("1777"))
+    assert(mode(sticky) === octal("1777"))
+    intercept[java.io.IOException](
+      ours.setPermission(new Path(dir.resolve("missing").toUri), perm("644")))
   }
 }
