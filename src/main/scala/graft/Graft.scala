@@ -209,8 +209,8 @@ object Graft {
     val native: functions.native.type = functions.native
   }
 
-  /** Parquet table readers with pinned schemas (events timestamp-codec
-    * branching included). */
+  /** Parquet table readers with schemas pinned from each file's footer
+    * (events timestamp-codec branching included). */
   val tables: Tables.type = Tables
 
   /** Look up a declared query by id — the full evidence surface.

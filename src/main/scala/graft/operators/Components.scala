@@ -1294,8 +1294,7 @@ object Components {
   def degreeAssortativity(spark: SparkSession, dir: String,
                           threshold: Double = 0.2): DataFrame = {
     import spark.implicits._
-    val docIds = spark.read.parquet(s"$dir/documents.parquet")
-      .select($"doc_id")
+    val docIds = Tables.documents(spark, dir).select($"doc_id")
     // collect-ok: one parquet-statistics MAX — the O(1) scalar that makes
     // the star namespace provably disjoint (see starHub scaladoc)
     val maxId = docIds.agg(max($"doc_id")).head.getLong(0)

@@ -75,11 +75,9 @@ object DedupOps {
     * per corpus copy. */
   private def shingleArrays(spark: SparkSession, dir: String, n: Int): DataFrame = {
     import spark.implicits._
-    // fan the tokenize→shingle pass out of a single-row-group fixture
-    // scan (serial otherwise — guide §2.5 input skew); no-op on real
-    // multi-file corpora
-    Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id")
+    // the tokenize→shingle pass reads the fanned corpus (serial on a
+    // single-row-group fixture otherwise); no-op on real multi-file corpora
+    Tables.fannedDocuments(spark, dir)
       .select($"doc_id", array_distinct(wordShingles(tokens($"text"), n)).as("arr"))
       .filter(size($"arr") > 0)
   }
@@ -234,7 +232,8 @@ object DedupOps {
                              bands: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
     // TWO storage regimes, gated on the SAME layout+size predicate as
-    // the shingle fan-out (round 18, measured both ways):
+    // Tables.fannedDocuments under the shingle pass (round 18, measured
+    // both ways):
     //  - fanned-out corpus (unsplittable fixture, ≥1k rows/core): an
     //    EAGER localCheckpoint leaf. The band self-join's concurrent AQE
     //    leaf stages race to fill a cold cache barrier — the job probe
@@ -1301,8 +1300,7 @@ object DedupOps {
     // as a pre-filter); with auditN == shingleN (every caller) the two
     // shingle subtrees are semantically equal and subexpression
     // elimination evaluates them once.
-    val shingledPlan = Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id")
+    val shingledPlan = Tables.fannedDocuments(spark, dir)
       .select($"doc_id",
         when(size(sigArr) > 0,
           graft.functions.native.md5MinHashSig(sigArr, perms)).as("sig"),
@@ -2071,11 +2069,10 @@ object DedupOps {
     // Leaf, not lazy barrier (round 18): the sketch feeds the index's
     // probe leg, its HAVING leg, and the size rollup — concurrent AQE
     // leaf stages raced the cold cache 13 ways (job probe: 13 × 2.9
-    // task-s of identical tokenize+winnow work). Built once, fanned out
-    // of an unsplittable single-row-group scan at probe scale.
+    // task-s of identical tokenize+winnow work). Built once, over
+    // Tables.fannedDocuments.
     val base = graft.CacheGuard.checkpointLeaf(
-      Tables.fanOutUnsplittable(spark, dir, "documents",
-          Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id")
+      Tables.fannedDocuments(spark, dir)
         .select($"doc_id", tokens($"text").as("tk"))
         .filter(size($"tk") >= k + w - 1)
         .select($"doc_id",

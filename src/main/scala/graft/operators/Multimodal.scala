@@ -260,9 +260,8 @@ object Multimodal {
     // (serial otherwise — guide §2.5 input skew; the sf1b probe measured
     // the render stage at wall ≈ task ≈ 3.3 s on one partition); no-op
     // on real multi-file corpora and on the small bench fixtures
-    Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir)
-          .select($"doc_id", coalesce($"text", lit("")).as("text")), "doc_id")
+    Tables.fannedDocuments(spark, dir)
+      .select($"doc_id", coalesce($"text", lit("")).as("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
         ImageIO.setUseCache(false) // per-partition codec setup, no temp files
@@ -475,9 +474,8 @@ object Multimodal {
     * Window, no self-join, nothing quadratic. */
   def mediaCorpusAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val decoded = Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir)
-          .select($"doc_id", coalesce($"text", lit("")).as("text")), "doc_id")
+    val decoded = Tables.fannedDocuments(spark, dir)
+      .select($"doc_id", coalesce($"text", lit("")).as("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
         ImageIO.setUseCache(false)
@@ -639,9 +637,8 @@ object Multimodal {
     * anything downstream (embedding, captioning) pays per-item cost. */
   def videoKeyframes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val dec = Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir)
-          .select($"doc_id", coalesce($"text", lit("")).as("text")), "doc_id")
+    val dec = Tables.fannedDocuments(spark, dir)
+      .select($"doc_id", coalesce($"text", lit("")).as("text"))
       .as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, text) =>
@@ -769,10 +766,13 @@ object Multimodal {
 
   def perceptualHashes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir)
+    // fan the codec pass out of a single-row-group fixture scan (guide
+    // §2.5; serial wall ≈ task measured at sf1b) below the twin union;
+    // no-op on real corpora
+    val docs = Tables.fannedDocuments(spark, dir)
       .select($"doc_id", coalesce($"text", lit("")).as("text"))
-    val off = docs.agg((max($"doc_id") + 1L).as("__off"))
-    val corpus = docs
+    val off = Tables.documents(spark, dir).agg((max($"doc_id") + 1L).as("__off"))
+    docs
       .select($"doc_id".as("base_id"), $"doc_id".as("media_id"), $"text",
         lit(0).as("gshift"))
       .unionByName(
@@ -780,10 +780,6 @@ object Multimodal {
           .crossJoin(broadcast(off))
           .select($"doc_id".as("base_id"), ($"doc_id" + $"__off").as("media_id"),
             $"text", lit(phashGrayShift).as("gshift")))
-    // fan the codec pass out of a single-row-group fixture scan (guide
-    // §2.5; serial wall ≈ task measured at sf1b); no-op on real corpora
-    Tables.fanOutUnsplittable(spark, dir, "documents",
-        corpus, "media_id")
       .as[(Long, Long, String, Int)]
       .mapPartitions { it =>
         ImageIO.setUseCache(false)
@@ -920,10 +916,12 @@ object Multimodal {
     * phashPairs ADVICE). */
   def videoPerceptualHashes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir)
+    // same fan-out as perceptualHashes: the GVID render+parse pass must
+    // not ride a serial fixture scan (no-op on real corpora)
+    val docs = Tables.fannedDocuments(spark, dir)
       .select($"doc_id", coalesce($"text", lit("")).as("text"))
-    val off = docs.agg((max($"doc_id") + 1L).as("__off"))
-    val corpus = docs
+    val off = Tables.documents(spark, dir).agg((max($"doc_id") + 1L).as("__off"))
+    docs
       .select($"doc_id".as("base_id"), $"doc_id".as("media_id"), $"text",
         lit(0).as("gshift"))
       .unionByName(
@@ -931,10 +929,6 @@ object Multimodal {
           .crossJoin(broadcast(off))
           .select($"doc_id".as("base_id"), ($"doc_id" + $"__off").as("media_id"),
             $"text", lit(phashGrayShift).as("gshift")))
-    // same fan-out as perceptualHashes: the GVID render+parse pass must
-    // not ride a serial fixture scan (no-op on real corpora)
-    Tables.fanOutUnsplittable(spark, dir, "documents",
-        corpus, "media_id")
       .as[(Long, Long, String, Int)]
       .mapPartitions { it =>
         it.map { case (baseId, mediaId, text, gshift) =>

@@ -546,8 +546,7 @@ object TextAnalysis {
     // leg, the bigram leg, and the per-doc attach — a lazy cache was raced
     // 3-ways cold, and the tokenize rode a serial scan at probe scale
     val tk = graft.CacheGuard.checkpointLeaf(
-      Tables.fanOutUnsplittable(spark, dir, "documents",
-          Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id")
+      Tables.fannedDocuments(spark, dir)
         .select($"doc_id", tokens($"text").as("tk")))
     val toks = tk.select(explode($"tk").as("term"))
     val uni = toks.groupBy($"term").agg(count(lit(1)).as("c1"))
@@ -617,11 +616,9 @@ object TextAnalysis {
     // and 3–6.5 s of Catalyst plan-build per run re-planning the nested
     // tower. Each leaf is dictionary-sized, materialized exactly once, and
     // every reference plans as a 1-line scan. The corpus is still scanned
-    // exactly once (the dict build), fanned out of an unsplittable
-    // single-row-group scan at probe scale (gate: Tables.unsplittable).
+    // exactly once (the dict build), through Tables.fannedDocuments.
     var cur = graft.CacheGuard.checkpointLeaf(
-      Tables.fanOutUnsplittable(spark, dir, "documents",
-          Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id")
+      Tables.fannedDocuments(spark, dir)
         .select(explode(tokens($"text")).as("w"))
         .filter(length($"w") >= 2)
         .groupBy($"w").agg(count(lit(1)).as("c"))
@@ -678,8 +675,7 @@ object TextAnalysis {
     import spark.implicits._
     val enc = bpeEncodedTypes(spark, dir)
       .select($"w", size(split($"enc", " ")).cast("long").as("n_bpe"))
-    Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id")
+    Tables.fannedDocuments(spark, dir)
       .select($"doc_id", explode(tokens($"text")).as("w"))
       .join(broadcast(enc), "w")
       .groupBy($"doc_id")
@@ -709,8 +705,7 @@ object TextAnalysis {
           concat(lit(" "), $"sym_a", lit(" "), $"sym_b", lit(" ")).as(s"p$r"),
           concat(lit(" "), $"sym_a", $"sym_b", lit(" ")).as(s"q$r"))
     }
-    val types = Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id")
+    val types = Tables.fannedDocuments(spark, dir)
       .select(explode(tokens($"text")).as("w")).distinct()
       .withColumn("s", concat(lit(" "), regexp_replace($"w", "(.)", "$1 ")))
     val withMerges = mergeCols.foldLeft(types)((df, m) => df.crossJoin(broadcast(m)))
@@ -1319,18 +1314,15 @@ object TextAnalysis {
   def positionalProfile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val toks = tokens($"text")
-    // fan the tokenize+posexplode out of an unsplittable single-row-group
-    // scan (guide §2.5; no-op on any real multi-file corpus and below the
-    // size gate): measured 41 task-s on ONE task at sf1b before this.
+    // the tokenize+posexplode reads the fanned corpus (no-op on any real
+    // multi-file corpus and below the size gate): measured 41 task-s on
+    // ONE task at sf1b before the fan-out.
     // Lower gate than the chain default: this projection explodes EVERY
     // token with its position (~10x the chain's per-row tokenize cost),
     // so the exchange pays off at far smaller corpora — measured in-suite
     // at 5k docs: 2.56 s serial vs 0.45-0.66 s fanned; the four lighter
     // token passes measured flat-to-worse at 128 and keep the default
-    val base = Tables.fanOutUnsplittable(spark, dir, "documents",
-      Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id",
-      minRowsPerCore = 128)
-    val counts = base
+    val counts = Tables.fannedDocuments(spark, dir, minRowsPerCore = 128)
       .select(size(toks).cast("long").as("l"),
         posexplode(toks).as(Seq("p", "tok")))
       .select(expr("least(p * 10 div greatest(l, 1), 9)").as("rp"), $"tok")
@@ -1365,9 +1357,7 @@ object TextAnalysis {
     * the exchange. */
   def distinctNgramDiversity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val grams = Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir).select($"doc_id", $"source", $"text"),
-        "doc_id")
+    val grams = Tables.fannedDocuments(spark, dir)
       .select($"source", tokens($"text").as("tk"))
       .select($"source", explode(concat($"tk",
         wordShingles($"tk", 2), wordShingles($"tk", 3))).as("gram"))
@@ -1414,9 +1404,7 @@ object TextAnalysis {
     * by source — never global), and an O(sources) rollup. */
   def zipfSlope(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val freq = Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir).select($"doc_id", $"source", $"text"),
-        "doc_id")
+    val freq = Tables.fannedDocuments(spark, dir)
       .select($"source", explode(tokens($"text")).as("tok"))
       .groupBy($"source", $"tok").agg(count(lit(1)).as("f"))
     val wRank = org.apache.spark.sql.expressions.Window
@@ -1470,8 +1458,7 @@ object TextAnalysis {
   def knBigramTable(spark: SparkSession, dir: String,
                     topN: Int = knTopN): DataFrame = {
     import spark.implicits._
-    val bg = Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id")
+    val bg = Tables.fannedDocuments(spark, dir)
       .select(explode(wordShingles(tokens($"text"), 2)).as("bg"))
       .select(substring_index($"bg", " ", 1).as("w1"),
         substring_index($"bg", " ", -1).as("w2"))
@@ -1672,11 +1659,10 @@ object TextAnalysis {
     // leaf, not lazy barrier (round 18): the dict is referenced by the
     // seed-substring count plus every EM round's Viterbi pass — each a
     // broadcast-fed AQE leg that raced the cold cache partition-by-
-    // partition. One corpus tokenize (fanned out of an unsplittable
-    // single-row-group scan at probe scale), materialized exactly once.
+    // partition. One corpus tokenize over Tables.fannedDocuments,
+    // materialized exactly once.
     graft.CacheGuard.checkpointLeaf(
-      Tables.fanOutUnsplittable(spark, dir, "documents",
-          Tables.documents(spark, dir).select($"doc_id", $"text"), "doc_id")
+      Tables.fannedDocuments(spark, dir)
         .select(explode(tokens($"text")).as("w"))
         .filter($"w".rlike("^[a-z0-9]+$") &&
           length($"w") <= uniMaxWordLen)
@@ -1818,9 +1804,7 @@ object TextAnalysis {
           size(filter(split($"b.path", "\\|"), x => x =!= lit("")))
             .cast("long").as("n_pieces"),
           length($"w").cast("long").as("n_chars")))
-    Tables.fanOutUnsplittable(spark, dir, "documents",
-        Tables.documents(spark, dir).select($"doc_id", $"source", $"text"),
-        "doc_id")
+    Tables.fannedDocuments(spark, dir)
       .select($"source", explode(tokens($"text")).as("w"))
       .join(enc, Seq("w"), "left")
       .groupBy($"source")

@@ -100,9 +100,12 @@ class PlanDisciplineSpec extends AnyFunSuite {
   private val writeStreamRe = """\bwriteStream\b""".r
   private val rawLocalFsRe = """\bRawLocalFileSystem\b""".r
   private val streamStart = "src/main/scala/graft/streaming/StreamStart.scala"
+  private val tablePathRe = ("""/(\$\{?\w+\}?|region|nation|customer|supplier|part|""" +
+    """orders|lineitem|events|documents|embeddings)\.parquet\b""").r
+  private val tablesSource = "src/main/scala/graft/Tables.scala"
 
   /** Code lines naming `name` (comment lines skipped, trailing comments
-    * cut; no waiver: the name belongs to StreamStart alone). */
+    * cut; no waiver: the name belongs to one module alone). */
   def codeNaming(name: scala.util.matching.Regex)(path: String, text: String): Seq[String] =
     text.linesIterator.zipWithIndex.flatMap { case (line, i) =>
       val t = line.trim
@@ -122,6 +125,11 @@ class PlanDisciplineSpec extends AnyFunSuite {
     * through StreamStart's subclass of it, which sets modes in the JVM. */
   def rawLocalFsUses(path: String, text: String): Seq[String] =
     codeNaming(rawLocalFsRe)(path, text)
+
+  /** Code lines naming a `<dir>/<table>.parquet` path: tables are read
+    * through `Tables`, the one module that knows their file layout. */
+  def tablePaths(path: String, text: String): Seq[String] =
+    codeNaming(tablePathRe)(path, text)
 
   private def mainSources(): Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
@@ -273,6 +281,29 @@ class PlanDisciplineSpec extends AnyFunSuite {
         |val myRawLocalFileSystemFactory = 1
         |""".stripMargin
     val bad = rawLocalFsUses("Fixture.scala", fixture)
+    assert(bad.map(_.split(":")(1)) === Seq("1", "6"), bad.mkString("\n"))
+  }
+
+  test("<dir>/<table>.parquet paths appear in src/main/scala only inside Tables") {
+    // a direct read would skip the footer schema and the fan-out gate
+    val uses = mainSources().flatMap(p =>
+      tablePaths(p.toString, java.nio.file.Files.readString(p)))
+    val (inside, stray) = uses.partition(_.startsWith(tablesSource + ":"))
+    assert(stray.isEmpty, "table files named outside Tables:\n" + stray.mkString("\n"))
+    assert(inside.nonEmpty, "Tables no longer names its table paths — scope broke?")
+  }
+
+  test("the table-path guard catches a direct table read") {
+    val fixture =
+      """val df = spark.read.parquet(s"$dir/documents.parquet")
+        |  * a Scaladoc line naming $dir/events.parquet is fine
+        |// so is a comment line: spark.read.parquet(s"$dir/orders.parquet")
+        |val ok = Tables.documents(spark, dir) // not s"$dir/documents.parquet"
+        |val p = new Path(
+        |  s"${dir}/$name.parquet")
+        |val out = s"$outDir/$name"
+        |""".stripMargin
+    val bad = tablePaths("Fixture.scala", fixture)
     assert(bad.map(_.split(":")(1)) === Seq("1", "6"), bad.mkString("\n"))
   }
 

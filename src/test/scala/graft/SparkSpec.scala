@@ -31,4 +31,26 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sf: String = TestSpark.sf
 
   def rows(df: DataFrame): Seq[org.apache.spark.sql.Row] = df.collect().toSeq
+
+  /** Spark jobs and SQL executions started while `body` runs. */
+  def jobsAndSql(body: => Unit): (Int, Int) = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.GraftBusBridge
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val (jobs, sqlRuns) = (new AtomicInteger, new AtomicInteger)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => sqlRuns.incrementAndGet()
+        case _ => ()
+      }
+    }
+    GraftBusBridge.flushListenerBus(sc)
+    sc.addSparkListener(l)
+    try { body; GraftBusBridge.flushListenerBus(sc) }
+    finally sc.removeSparkListener(l)
+    (jobs.get, sqlRuns.get)
+  }
 }
